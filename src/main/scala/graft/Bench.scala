@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Failed queries are reported explicitly (value -1
   * and an `errors` list) instead of silently contributing ~0s.
@@ -18,43 +16,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = args.toSet
-    // Local `file:` FS without the per-create chmod PROCESS FORK — see
-    // graft.util.LocalFsNoShell (no libhadoop in this image, so stock
-    // Hadoop shells out per created file: parquet parts, .crc twins,
-    // streaming state deltas and WAL entries; ~10–14 ms/fork measured).
-    // Results are unaffected; opt out with SPARK_GRAFT_LOCALFS_SHELL=1.
-    val spark = graft.util.LocalFsNoShell.confEntries
-      .foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep Spark's default whole-stage-codegen size limit (65535).
-      // Round 4 pinned this to 8000 (HotSpot's -XX:DontCompileHugeMethods
-      // threshold) for the deep Project chains in the FE pipeline, but the
-      // round-7 sf1 scale curve measured the cost side: the 19-aggregate
-      // wide-decimal moment pass (a13) compiles past 8000 bytecode bytes,
-      // and the WSCG FALLBACK (interpreted Volcano) is ~10x slower per row
-      // than a non-JIT'd codegen method — 3.0 s vs 33 s on 6M rows. At
-      // sf0.1 the full suite is noise-equal under either setting (102.9 s
-      // vs 96.8 s, within run-to-run spread), so the scale-safe default
-      // wins here; Main.scala keeps 8000 for the FE CLI path where the
-      // 1.5-2x JIT benefit was measured and no wide-decimal agg exists.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_LIMIT", "65535"))
-      // Generated-class cache (static conf, default 100 entries): the
-      // suite compiles thousands of distinct codegen units across 244
-      // queries, so the default LRU evicts every query's classes before
-      // its second timed run and Janino recompiles them on the clock.
-      // Sized to hold the suite's working set — the same setting any
-      // long-lived SQL service with a wide query repertoire runs with;
-      // not a local[32]-specific dial (driver-side planning cost).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Tables.preflight(spark, sfDir)
 

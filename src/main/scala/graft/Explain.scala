@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of selected declared
   * queries (scan pushdown, join strategies, codegen spans). Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
@@ -18,13 +16,7 @@ object Explain {
       "x10_bloom_join", "x11_bucketed_join", "q33_partition_pruning",
       "t12_tfidf", "j06_asof_nearest", "w08_running_distinct",
       "p09_domain_mix", "m16_pca")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.contains(name)) {

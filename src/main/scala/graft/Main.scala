@@ -54,21 +54,7 @@ object Main {
   private def required(kv: Map[String, String], key: String): String =
     kv.getOrElse(key, throw new IllegalArgumentException(s"missing --$key\n$usage"))
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    graft.util.LocalFsNoShell.confEntries
-      .foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the FE transform chain generates one deep WSCG method; over
-      // HotSpot's 8000-byte JIT limit it runs interpreted (measured
-      // 1.5x, BASELINE.md) — make Spark fall back to per-expression
-      // codegen instead
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private def session(): SparkSession = Session.local()
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("fe") =>

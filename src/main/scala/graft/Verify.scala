@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,7 @@ object Verify {
     // optional extra args: run only these query names (local iteration;
     // the driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.LocalFsNoShell.confEntries
-      .foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark reads them as long
-      // nanos under this flag (queries convert explicitly where needed).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: Spark's default WSCG size limit — the 8000 JIT
-      // alignment made the wide-decimal moment passes fall back to the
-      // ~10x-slower interpreted path at scale (round-7 sf1 measurement)
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_LIMIT", "65535"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Tables.preflight(spark, sfDir)
     new java.io.File(outDir).mkdirs()

@@ -30,8 +30,8 @@ object CosineSimUtil {
   * (which allocates a doubles array per row). On a 100 TB embedding corpus
   * this is the hot inner kernel of similarity search, so it is implemented
   * the preferred way per the build brief: custom `Expression` with
-  * `doGenCode`, registered through `SparkSessionExtensions`
-  * (graft.plans.GraftExtensions) or [[GraftFunctions.ensureRegistered]].
+  * `doGenCode`, registered into the session by
+  * [[GraftFunctions.ensureRegistered]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -55,8 +55,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Imperative registration (idempotent) for sessions built without the
-  * `spark.sql.extensions=graft.plans.GraftExtensions` config.
+/** Idempotent registration of graft's native SQL functions into a
+  * session's function registry; every query path that needs them calls
+  * [[GraftFunctions.ensureRegistered]] first.
   */
 object GraftFunctions {
   val cosineSimInfo = new ExpressionInfo(

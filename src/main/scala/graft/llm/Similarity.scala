@@ -1525,7 +1525,7 @@ object Similarity {
     * payloads ride only the candidate-pair sim join.
     *
     * The SEED list is IVF at a small fixed nprobe (linear scan mass,
-    * recall ~0.6 alone — measured in `probe_s12_np.scala`); refinement
+    * recall ≤ 0.74 alone — measured in commit e7a95e1); refinement
     * is what closes it to ≥ 0.9 (ScaleProbe `nnd` records the
     * per-round recall/mass curve at three SFs). `kBuild` > k is the
     * standard NN-Descent slack: a too-thin working list starves the

@@ -468,8 +468,8 @@ object CorpusOps {
     })
 
   /** j03 — the j02 range join written as a PLAIN SQL inequality join and
-    * left to the optimizer: [[graft.plans.RangeJoinRewrite]] (injected via
-    * SparkSessionExtensions in production, `ensureInjected` here) detects
+    * left to the optimizer: [[graft.plans.RangeJoinRewrite]] (attached by
+    * `ensureInjected`) detects
     * the point-in-interval shape and rewrites it to the banded equi-join —
     * the user writes the natural predicate, the engine avoids the
     * BroadcastNestedLoop plan. Same oracle semantics as j02.

@@ -2319,7 +2319,7 @@ object LlmOps {
     * asked for: the 0.9-recall IVF route was ~0.4·N² similarity mass
     * (deleted as a scale-killer); NN-Descent refinement over an IVF
     * seed (occupancy-constant cells, np = 16) closes what the seed
-    * alone can't (seed-only recall ~0.6 — `probe_s12_np.scala`;
+    * alone can't (seed-only recall ≤ 0.74 — commit e7a95e1;
     * refinement mass per node is bounded by C(2·kBuild, 2) per
     * round, independent of N, and the strictly-linear random-seed
     * variant measures 0.925 recall at rounds = 3 on sf0.1). Recall at
@@ -2466,10 +2466,10 @@ object LlmOps {
     * barely partitions and the shared residual codebook mixes
     * everything; measured recall stalls at 0.74–0.90 even at 60 %
     * scan, with the norm-corrected composite ranking measured ZERO
-    * better (scripts/probe_s13{,b}.scala) — while in its design
-    * regime (gsf10, n = 200 k, k1 = 196 × k2 = 32) the same search
-    * reads recall 0.96 at 9.5 % scan and 1.00 at 19 %
-    * (probe_s13c.scala). So the route is the operator: below the cap
+    * better — while in its design regime (gsf10, n = 200 k,
+    * k1 = 196 × k2 = 32) the same search reads recall 0.96 at 9.5 %
+    * scan and 1.00 at 19 % (SCALE.md "s13 size-routed ANN — probe
+    * ledger"). So the route is the operator: below the cap
     * s13 searches the SAME fitted 512-cell quantizer s02/s06/s10/s11
     * share (cachedIvfIndex — recall 0.96–1.0 at ≤ 40 % scan, measured
     * across the curve), past it the two-level index at nprobe = 20 %
@@ -2920,9 +2920,9 @@ object LlmOps {
     * shard affinely shifted toward the all-ones direction
     * (x → x + 1 per dim: an off-distribution cluster that KEEPS its
     * internal spread, the "new domain arrived" shape — probe-set dial,
-    * probe_s17{,b}.scala: a tight squeeze (0.2·x + 0.9) also degrades
-    * but is NOT repairable, because a near-zero-spread blob gives the
-    * refit nothing to split — occupancy skew measured 83 post-refit vs
+    * SCALE.md "Round-20: IVF index health + re-quantize ledger": a
+    * tight squeeze (0.2·x + 0.9) also degrades but is NOT repairable,
+    * because a near-zero-spread blob gives the refit nothing to split — occupancy skew measured 83 post-refit vs
     * 56 drifted; a +0.5 shift degrades only the residual at ≥ 20 k
     * corpora (the denser quantizer absorbs it — skew read 4.03 → 3.94
     * at gsf1); +1 degrades AND repairs both metrics with wide margins

@@ -811,7 +811,7 @@ object Relational {
     * custkeys; 3 columns, written before `c_mktsegment` existed) and v2
     * (odd keys; the current 4-column shape) — read under the current
     * 4-column schema. Measured Spark 4.1.2 semantics (probe
-    * `scripts/probe_q42_csv.scala`): PERMISSIVE keeps the old
+    * commit 8dbc707): PERMISSIVE keeps the old
     * generation, parses its column prefix, null-fills the missing
     * trailing column AND flags the row in the corrupt-record column;
     * DROPMALFORMED silently drops the old generation entirely; FAILFAST
@@ -885,7 +885,7 @@ object Relational {
     * table grows in place, a column ADDED over time — and the hazard q34
     * cannot see: the DEFAULT read of that prefix picks ONE footer at
     * plan time and can silently drop the new column for every row
-    * (measured on Spark 4.1.2, probe `scripts/probe_q43_parquet.scala` —
+    * (measured on Spark 4.1.2, commit 03b78db —
     * a pipeline that forgets the option reads a narrower table, no
     * error), where `mergeSchema=true` unions the footers and null-fills
     * v1 rows. Declared output: the merged rows (null-fill placement

@@ -314,9 +314,8 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Idempotently attach the rule to a session's extra optimizations (the
-    * runtime-injectable path; production sessions get it via
-    * [[GraftExtensions]] / `spark.sql.extensions`).
+  /** Idempotently attach the rule to a session's extra optimizations;
+    * every query path that relies on the rewrite calls this first.
     */
   def ensureInjected(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(RangeJoinRewrite)) {

@@ -48,6 +48,7 @@ final class PredictionServer(
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
+  private var pool: java.util.concurrent.ExecutorService = _
   private val lock = new Object
 
   def start(): InetSocketAddress = synchronized {
@@ -57,13 +58,16 @@ final class PredictionServer(
     server.createContext("/health", handler(handleHealth))
     server.createContext("/predict/batch", streamingHandler(handleBatch))
     server.createContext("/predict", handler(handleSingle))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(pool)
     server.start()
     server.getAddress
   }
 
+  /** Stops the listener and the handler pool (its threads are non-daemon). */
   def stop(): Unit = synchronized {
     if (server != null) { server.stop(0); server = null }
+    if (pool != null) { pool.shutdown(); pool = null }
   }
 
   private def handler(f: HttpExchange => (Int, String, String)): HttpHandler =
@@ -309,12 +313,7 @@ object ServeMain {
       sys.error("--model-dir is required"))
     val modelType = opts.getOrElse("model-type", "rf")
     val port = opts.getOrElse("port", "8080").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     val fe = new graft.features.FeatureEngineering("strict")
       .load(s"$modelDir/feature_engineering")
     val tt = new graft.features.TargetTransformer("price")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Deterministic synthetic-data generator for scale-curve measurement.
   *
@@ -112,15 +112,7 @@ object GenData {
     val sf = args(1).toDouble
     val staticFrom = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
 
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .appName(s"graft-gendata-sf$sf")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val nCustomer = math.max(150, (150000 * sf).toLong)

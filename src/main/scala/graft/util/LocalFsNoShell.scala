@@ -42,7 +42,7 @@ class NoShellRawLocalFileSystem extends RawLocalFileSystem {
     * `getFileLinkStatus(dst)` before renaming, and every state-store
     * delta, offset-WAL and commit-WAL entry goes through that rename —
     * measured ~25–30 ms per state-store commit with the fork vs ~1 ms
-    * without (StateStoreProbeImpl; disk vs tmpfs identical, so it was
+    * without (commit 762ecac; disk vs tmpfs identical, so it was
     * never IO). Replaced with a java.nio lstat: NOFOLLOW attributes plus
     * `Files.readSymbolicLink` for links — same FileStatus contract
     * (FNF on missing, `getSymlink` set iff link, path = the link itself),
@@ -102,15 +102,10 @@ class NoShellLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new NoShellRawLocalFs(uri, conf))
 
 object LocalFsNoShell {
-  /** Session-builder config entries installing the fork-free local FS.
-    * Opt out with SPARK_GRAFT_LOCALFS_SHELL=1 (restores stock Hadoop
-    * behavior, e.g. to re-measure the fork tax).
-    */
-  def confEntries: Seq[(String, String)] =
-    if (sys.env.get("SPARK_GRAFT_LOCALFS_SHELL").contains("1")) Seq.empty
-    else Seq(
-      "spark.hadoop.fs.file.impl" ->
-        classOf[NoShellLocalFileSystem].getName,
-      "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
-        classOf[NoShellLocalFs].getName)
+  /** Session-builder config entries installing the fork-free local FS. */
+  val confEntries: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[NoShellLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[NoShellLocalFs].getName)
 }

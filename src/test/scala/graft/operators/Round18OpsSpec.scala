@@ -16,7 +16,7 @@ class Round18OpsSpec extends SparkSpec {
     // sf0.01 = the oracle gate's SF; the flat route engages there
     // (n = 500 ≪ the 65 k ivf2 boundary) with the s02-measured dial.
     // The ivf2 route's recall/scan is probe-pinned at its design scale
-    // (scripts/probe_s13c.scala, SCALE.md) and its exactness contracts
+    // (SCALE.md "s13 size-routed ANN — probe ledger") and its exactness contracts
     // are unit-pinned in Round17OpsSpec.
     val row = graft.SparkEntry.queries("s13_ivf2_ann")(spark, "/root/testdata/sf0.01").head()
     assert(row.getAs[Long]("n_probes") === 5L)

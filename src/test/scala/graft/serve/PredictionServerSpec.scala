@@ -191,4 +191,25 @@ class PredictionServerSpec extends SparkSpec {
         served(id) shouldBe (math.floor(p * 100 + 0.5) / 100) +- 0.011
     }
   }
+
+  test("stop() terminates the handler pool's threads") {
+    import scala.jdk.CollectionConverters._
+    def poolThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.matches("pool-\\d+-thread-\\d+")).toSet
+    val before = poolThreads
+    var handlers = Set.empty[Thread]
+    withServer { port =>
+      (1 to 3).foreach { _ =>
+        client.send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:$port/health")).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).statusCode() shouldBe 200
+      }
+      handlers = poolThreads -- before
+    }
+    handlers should not be empty
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (handlers.exists(_.isAlive) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    handlers.filter(_.isAlive).map(_.getName) shouldBe empty
+  }
 }
