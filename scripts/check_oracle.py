@@ -3,13 +3,15 @@
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir> [query ...]
 
-Reads each Spark result parquet under <verifyOutDir>/<name>/, runs the
+Every oracle_sql.json key (within the query filter) must have an output
+dir; a missing one is a FAIL. Reads each Spark result parquet under
+<verifyOutDir>/<name>/, runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 <sfDir> parquet tables, and compares: row count, column names, and exact
 values after sorting columns by name and rows by all columns (strictest
 plausible interpretation of the driver's hash compare).
 """
-import sys, json, glob, math
+import sys, json, glob, math, os
 import duckdb
 import pandas as pd
 
@@ -56,6 +58,12 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
+    # an oracled query with no output dir failed (or never ran): it is a
+    # FAIL, not a query silently left out of the compare
+    for name in sorted(oracle):
+        if (not only or name in only) and not os.path.isdir(f"{out}/{name}"):
+            print(f"FAIL {name}: no output dir")
+            n_fail += 1
     for d in sorted(glob.glob(f"{out}/*/")):
         name = d.rstrip("/").split("/")[-1]
         if only and name not in only:

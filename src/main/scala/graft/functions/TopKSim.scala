@@ -189,9 +189,11 @@ case class NbrUnion(
     val s = score.eval(input)
     val i = id.eval(input)
     val f = isFwd.eval(input)
-    if (s != null && i != null && f != null) {
+    // a forward edge is kept whatever its score; only the reverse top-k
+    // ranks by score, so only it needs one
+    if (i != null && f != null) {
       if (f.asInstanceOf[Boolean]) b.addFwd(i.asInstanceOf[Long])
-      else b.rev.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
+      else if (s != null) b.rev.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
     }
     b
   }

@@ -602,8 +602,8 @@ object Curation {
     // manifest dropped FIRST, data second, manifest committed LAST — any
     // crash in between leaves a loudly-refusing dataset (the
     // writeIvfIndex delete-all-upfront rule)
-    graft.util.IndexSidecar.deleteIfExists(spark, path, "_graft_shards.json")
-    graft.util.IndexSidecar.deleteIfExists(spark, path, "data")
+    graft.util.IndexStore.deleteIfExists(spark, path, "_graft_shards.json")
+    graft.util.IndexStore.deleteIfExists(spark, path, "data")
     p.write.mode("overwrite").partitionBy("shard").parquet(s"$path/data")
     p.unpersist(blocking = false)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -616,7 +616,7 @@ object Curation {
       n.put("nChunks", e.nChunks)
       n.put("orderChecksum", e.orderChecksum): Unit
     }
-    graft.util.IndexSidecar.writeBytesAtomic(spark, path,
+    graft.util.IndexStore.writeBytesAtomic(spark, path,
       "_graft_shards.json", mapper.writeValueAsBytes(root))
     entries
   }
@@ -625,10 +625,10 @@ object Curation {
     * (the signature of a crashed or half-written materialization). */
   def readShardManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[ShardManifestEntry] = {
-    require(graft.util.IndexSidecar.exists(spark, path, "_graft_shards.json"),
+    require(graft.util.IndexStore.exists(spark, path, "_graft_shards.json"),
       s"no shard manifest at $path — dataset missing or half-written")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(new String(graft.util.IndexSidecar
+    val root = mapper.readTree(new String(graft.util.IndexStore
       .readBytes(spark, path, "_graft_shards.json"), "UTF-8"))
     (0 until root.size()).map { i =>
       val n = root.get(i)

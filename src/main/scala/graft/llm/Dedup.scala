@@ -11,22 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // ---------------------------------------------------- index sidecar IO ---
-  // Shared with the IVF store lifecycle ([[graft.util.IndexSidecar]]) —
-  // thin local aliases keep the ~20 call sites below unchanged.
-
-  private def sidecar(spark: SparkSession, dir: String, name: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
-    graft.util.IndexSidecar.resolve(spark, dir, name)
-
-  private def writeSidecarBytes(spark: SparkSession, dir: String,
-      name: String, bytes: Array[Byte]): Unit =
-    graft.util.IndexSidecar.writeBytes(spark, dir, name, bytes)
-
-  private def readSidecarBytes(spark: SparkSession, dir: String,
-      name: String): Array[Byte] =
-    graft.util.IndexSidecar.readBytes(spark, dir, name)
-
   /** Exact dedup statistics: total rows, distinct texts, duplicate rows.
     * (Keeper assignment — one surviving row per text — is [[dedupKeepFirst]].)
     */
@@ -104,7 +88,8 @@ object Dedup {
     keys.unpersist()
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    writeSidecarBytes(spark, path, "_graft_bloom.bin", bos.toByteArray)
+    graft.util.IndexStore.writeBytesAtomic(spark, path, "_graft_bloom.bin",
+      bos.toByteArray)
   }
 
   /** [[matchAgainstExactIndex]] behind the [[writeExactIndexBloom]] gate:
@@ -123,7 +108,7 @@ object Dedup {
       idCol: String, textCol: String, path: String): DataFrame = {
     val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(
-        readSidecarBytes(spark, path, "_graft_bloom.bin")))
+        graft.util.IndexStore.readBytes(spark, path, "_graft_bloom.bin")))
     val bc = spark.sparkContext.broadcast(bloom)
     val fps = batch.select(col(idCol).as("batch_id"),
         TextAnalysis.fingerprint(col(textCol)).as("fp"))
@@ -552,209 +537,153 @@ object Dedup {
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
+  /** The LSH parameters a MinHash store's band keys were built with — its
+    * manifest `params` ([[graft.util.IndexStore]]). Stores are matched
+    * only against identical params: band keys from different
+    * (θ, nTables, r) are incomparable key spaces, and a θ/r mismatch would
+    * silently change the recall budget.
+    */
+  final case class MinhashParams(minJaccard: Double, nTables: Int,
+      rowsPerBand: Int, bands: Int)
+
+  private def minhashParams(minJaccard: Double, nTables: Int,
+      rowsPerBand: Int): MinhashParams =
+    MinhashParams(minJaccard, nTables, rowsPerBand,
+      bandsFor(minJaccard, nTables, rowsPerBand))
+
+  /** The MinHash payload of the generational store: per generation, one
+    * `hashes` row (id, sorted gram hashes) and b `bands` rows (id, band
+    * key) per document. */
+  private[graft] val minhashStore = new graft.util.IndexStore
+    .Layout[MinhashParams]("minhash", "id", Seq("hashes", "bands"), Nil)
+
+  /** A MinHash store, refused loudly unless it was built with exactly `p`. */
+  private def checked(store: graft.util.IndexStore.Snapshot[MinhashParams],
+      p: MinhashParams): graft.util.IndexStore.Snapshot[MinhashParams] = {
+    require(store.params == p,
+      s"index at ${store.path} was built with ${store.params}, requested $p")
+    store
+  }
+
+  private def openMinhash(spark: SparkSession, path: String,
+      p: MinhashParams): graft.util.IndexStore.Snapshot[MinhashParams] =
+    checked(graft.util.IndexStore.open(spark, path, minhashStore), p)
+
   /** Persist the corpus side of [[minhashPairsAgainst]] as an on-disk
-    * dedup INDEX: band keys (`<path>/bands`) + sorted gram hashes
-    * (`<path>/hashes`) as parquet, plus `_graft_index.json` pinning the
-    * LSH parameters the keys were built with. This is the shape d12's
-    * docstring promises for production: the corpus pays its shingle +
-    * signature cost ONCE at index-build time, and every arriving batch
-    * joins against the stored keys — no corpus recompute per shard, no
-    * per-session cache accumulation. At 100 TB the bands table would be
-    * written bucketed on `bk` so ingest joins are co-located
-    * (x11's lever); plain parquet here keeps the gate portable.
-    *
-    * LAYOUT: each table is a directory of GENERATION partitions —
-    * `<path>/bands/gen=base` here, `gen=<batchId>` per
-    * [[appendToMinhashIndex]] — so an append is an all-or-nothing
-    * per-generation directory write instead of loose files mixed into
-    * one dir (the round-12 atomicity advice); readers partition-discover
-    * the `gen` column and project it away.
+    * dedup INDEX: band keys (`bands`) + sorted gram hashes (`hashes`) in
+    * the generational store ([[graft.util.IndexStore]] — layout, manifest
+    * commit, rebuild-replaces-all), the LSH parameters pinned in its
+    * manifest. This is the shape d12's docstring promises for production:
+    * the corpus pays its shingle + signature cost ONCE at index-build
+    * time, and every arriving batch joins against the stored keys — no
+    * corpus recompute per shard, no per-session cache accumulation. At
+    * 100 TB the bands table would be written bucketed on `bk` so ingest
+    * joins are co-located (x11's lever); plain parquet here keeps the
+    * gate portable.
     */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, minJaccard: Double, nTables: Int = 8,
       rowsPerBand: Int = 3): Unit = {
-    val bands = bandsFor(minJaccard, nTables, rowsPerBand)
+    val p = minhashParams(minJaccard, nTables, rowsPerBand)
     val (shingled, keys) =
-      shingleAndBand(corpus, idCol, textCol, bands, rowsPerBand)
-    // a (re)build REPLACES the whole index: drop every surviving
-    // generation first, or appends from a previous build would leak into
-    // the new one (the gen=base overwrite alone only replaces itself).
-    // tombstones included: a stale takedown list surviving a rebuild
-    // would silently anti-join ids that are live in the new corpus
-    for (sub <- Seq("bands", "hashes", "tombstones")) {
-      val (fs, p) = sidecar(corpus.sparkSession, path, sub)
-      if (fs.exists(p)) fs.delete(p, true): Unit
+      shingleAndBand(corpus, idCol, textCol, p.bands, rowsPerBand)
+    graft.util.IndexStore.build(corpus.sparkSession, path, minhashStore) { dir =>
+      keys.write.mode("overwrite").parquet(dir("bands"))
+      shingled.select(col("id"), col("hs"))
+        .write.mode("overwrite").parquet(dir("hashes"))
+      p
     }
-    keys.write.mode("overwrite").parquet(s"$path/bands/gen=base")
-    shingled.select(col("id"), col("hs"))
-      .write.mode("overwrite").parquet(s"$path/hashes/gen=base")
     shingled.unpersist() // both consumers are materialized — no cache leak
-    val meta = s"""{"minJaccard": $minJaccard, "nTables": $nTables, """ +
-      s""""rowsPerBand": $rowsPerBand, "bands": $bands}"""
-    writeSidecarBytes(corpus.sparkSession, path, "_graft_index.json",
-      meta.getBytes("UTF-8"))
   }
 
   /** Append a new shard to a [[writeMinhashIndex]] store — incremental
     * index MAINTENANCE, the missing half of the d13 ingest lifecycle: a
     * production pipeline doesn't rebuild its LSH index per shard, it
-    * appends each deduped shard's band keys + sorted hashes (parquet
-    * append — at 100 TB these are partition adds to the bucketed bands
-    * table, a metadata operation). The shard pays its shingle + signature
-    * cost exactly once, here; matching future batches against the grown
-    * index is then identical to matching against a one-shot rebuild over
-    * the union corpus — which d19's exact cross-set oracle asserts against
-    * brute force, not against the rebuild. The stored LSH parameters must
-    * match the requested ones (same loud refusal as
-    * [[minhashPairsAgainstIndex]] — a θ/r mismatch would silently mix
-    * incompatible signatures into one key space).
+    * appends each deduped shard's band keys + sorted hashes as one new
+    * store generation (at 100 TB, partition adds to the bucketed bands
+    * table — a metadata operation). The shard pays its shingle +
+    * signature cost exactly once, here; matching future batches against
+    * the grown index is then identical to matching against a one-shot
+    * rebuild over the union corpus — which d19's exact cross-set oracle
+    * asserts against brute force, not against the rebuild. The stored
+    * LSH parameters must match the requested ones (a θ/r mismatch would
+    * silently mix incompatible signatures into one key space).
     *
-    * COMMIT PROTOCOL (round-12 advice — the old loose-file double append
-    * could die between its two writes and leave band keys whose
-    * signatures were missing, permanently and silently): each append
-    * lands in its own `gen=<batchId>` generation directory, HASHES
-    * FIRST, bands last. A failure anywhere leaves either orphan hash
-    * rows (invisible — candidates originate from band keys, so an id
-    * with hashes but no bands never surfaces) or nothing; it can never
-    * publish a band key whose signatures are missing. Retrying the same
-    * `batchId` OVERWRITES both generation dirs, so recovery is
-    * idempotent — no duplicate rows, unlike a blind parquet re-append.
-    * `batchId` is the caller's shard identity (ingest shard id, date
-    * partition, …); reusing one replaces that shard in the index.
+    * The generation is invisible until the store's manifest commit
+    * ([[graft.util.IndexStore.append]]); retrying the same `batchId`
+    * overwrites it and commits once. `batchId` is the caller's shard
+    * identity (ingest shard id, date partition, …); reusing one replaces
+    * that shard in the index.
     */
   def appendToMinhashIndex(batch: DataFrame, idCol: String, textCol: String,
       path: String, batchId: String, minJaccard: Double, nTables: Int = 8,
       rowsPerBand: Int = 3): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-      !batchId.exists(c => c == '/' || c == '=' || c.isWhitespace),
-      s"batchId must be a non-empty path-safe token, not 'base': '$batchId'")
-    val meta = new String(
-      readSidecarBytes(batch.sparkSession, path, "_graft_index.json"), "UTF-8")
-    val expected = s"""{"minJaccard": $minJaccard, "nTables": $nTables, """ +
-      s""""rowsPerBand": $rowsPerBand, "bands": ${bandsFor(minJaccard, nTables, rowsPerBand)}}"""
-    require(meta == expected,
-      s"index at $path was built with $meta, append requested $expected")
-    val (shingled, keys) = shingleAndBand(batch, idCol, textCol,
-      bandsFor(minJaccard, nTables, rowsPerBand), rowsPerBand)
-    shingled.select(col("id"), col("hs"))
-      .write.mode("overwrite").parquet(s"$path/hashes/gen=$batchId")
-    keys.write.mode("overwrite").parquet(s"$path/bands/gen=$batchId")
-    shingled.unpersist() // both consumers materialized — no cache leak
+    val spark = batch.sparkSession
+    val p = minhashParams(minJaccard, nTables, rowsPerBand)
+    graft.util.IndexStore.append(spark, path, minhashStore, batchId) { (store, dir) =>
+      checked(store, p): Unit
+      val (shingled, keys) =
+        shingleAndBand(batch, idCol, textCol, p.bands, rowsPerBand)
+      shingled.select(col("id"), col("hs"))
+        .write.mode("overwrite").parquet(dir("hashes"))
+      keys.write.mode("overwrite").parquet(dir("bands"))
+      shingled.unpersist() // both consumers materialized — no cache leak
+    }
   }
 
   /** TOMBSTONE corpus documents in a [[writeMinhashIndex]] store — the
     * DELETE of the index lifecycle (retracted sources, takedowns,
-    * right-to-be-forgotten): deletions are written as an append-only id
-    * list (`<path>/tombstones/gen=<batchId>`, the same generation
-    * choreography as [[appendToMinhashIndex]] — idempotent retry by
-    * overwrite, duplicates harmless since consumers anti-join), never as
-    * in-place rewrites of the band/hash tables: at 100 TB rewriting the
-    * index per takedown batch is a full-table job, while an id-list
-    * anti-join is a broadcast against each query. The physical rows are
-    * reclaimed by the next [[compactMinhashIndex]], which applies
-    * tombstones and resets the list — exactly the delete-vector /
-    * merge-on-read pattern lakehouse table formats use.
+    * right-to-be-forgotten): an append-only id list
+    * ([[graft.util.IndexStore.tombstone]]), never an in-place rewrite of
+    * the band/hash tables. Queries exclude the ids merge-on-read; the
+    * physical rows are reclaimed by the next [[compactMinhashIndex]] —
+    * the delete-vector / merge-on-read pattern lakehouse table formats
+    * use.
     */
   def tombstoneMinhashIndex(spark: SparkSession, path: String,
-      ids: DataFrame, idCol: String, batchId: String): Unit = {
-    require(batchId.nonEmpty &&
-      !batchId.exists(c => c == '/' || c == '=' || c.isWhitespace),
-      s"batchId must be a non-empty path-safe token: '$batchId'")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("overwrite").parquet(s"$path/tombstones/gen=$batchId")
-  }
-
-  /** The store's live tombstone id set, or None if none were ever
-    * written. */
-  private def readTombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val (fs, p) = sidecar(spark, path, "tombstones")
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/tombstones").select("id"))
-    else None
-  }
+      ids: DataFrame, idCol: String, batchId: String): Unit =
+    graft.util.IndexStore.tombstone(spark, path, ids, idCol, batchId)
 
   /** COMPACT a [[writeMinhashIndex]] store into a fresh single-generation
-    * index at `destPath` — the maintenance step that closes the index
-    * lifecycle (build d13 → append d19 → query → compact): after many
-    * appends the store is many small per-shard generations (small-file
-    * pressure, per-generation footer/listing overhead on every read);
-    * compaction rewrites the SAME rows as one `gen=base` generation. Pure
-    * IO — the corpus is never re-shingled, which is the entire economics
-    * of the persisted index (a rebuild would pay the shingle + signature
-    * CPU again; at 100 TB this job is a scan + columnar rewrite, and the
-    * bands table would come out bucketed on `bk`, x11's lever).
-    * Crash-safe by CONSTRUCTION rather than choreography: the destination
-    * is a NEW index directory (the table-version-swap pattern — the
-    * caller flips its path config after success), the source is
-    * read-only throughout, and the `_graft_index.json` sidecar is
-    * written LAST so a half-written destination fails loudly on first
-    * use (no meta → refuse) instead of answering from partial data.
-    * d20's oracle pins compacted-index results ≡ the grown index's ≡
-    * brute force over the union corpus.
+    * index at `destPath` ([[graft.util.IndexStore.compact]]) — the
+    * maintenance step that closes the index lifecycle (build d13 → append
+    * d19 → query → compact): after many appends the store is many small
+    * per-shard generations; compaction rewrites the same live rows as one
+    * generation, applying tombstones physically. Pure IO — the corpus is
+    * never re-shingled, which is the entire economics of the persisted
+    * index. d20's oracle pins compacted-index results ≡ the grown index's
+    * ≡ brute force over the union corpus.
     */
   def compactMinhashIndex(spark: SparkSession, srcPath: String,
-      destPath: String): Unit = {
-    require(srcPath != destPath,
-      "compaction writes a NEW index directory (version-swap pattern); " +
-        "in-place compaction would lose crash safety")
-    val meta = readSidecarBytes(spark, srcPath, "_graft_index.json")
-    // apply live tombstones: compaction is where merge-on-read deletes
-    // become physical — the destination starts with an empty tombstone set
-    val dead = readTombstones(spark, srcPath)
-    def live(df: DataFrame): DataFrame = dead match {
-      case Some(t) => df.join(broadcast(t), Seq("id"), "left_anti")
-      case None => df
-    }
-    val bands = live(spark.read.parquet(s"$srcPath/bands").select("id", "bk"))
-    val hashes = live(spark.read.parquet(s"$srcPath/hashes").select("id", "hs"))
-    // "tombstones" included: the destination must START empty — a
-    // pre-existing takedown list at destPath (ping-pong compaction onto a
-    // previously-used dir) would silently kill live docs
-    for (sub <- Seq("bands", "hashes", "tombstones")) {
-      val (fs, p) = sidecar(spark, destPath, sub)
-      if (fs.exists(p)) fs.delete(p, true): Unit
-    }
-    hashes.write.mode("overwrite").parquet(s"$destPath/hashes/gen=base")
-    bands.write.mode("overwrite").parquet(s"$destPath/bands/gen=base")
-    writeSidecarBytes(spark, destPath, "_graft_index.json", meta)
-  }
+      destPath: String): Unit =
+    graft.util.IndexStore.compact(spark, srcPath, destPath, minhashStore)
 
   /** Incremental near-dup against a [[writeMinhashIndex]] index: the
     * batch contributes its own shingles + keys; the corpus side comes
-    * entirely from the stored parquet. The index's recorded LSH
-    * parameters must match the requested ones (a θ/r mismatch would
-    * silently change the recall budget — refused loudly instead).
-    * Output: (new_id, corpus_id, jaccard), identical to
-    * [[minhashPairsAgainst]] on the same frames — which is exactly what
-    * the d13 oracle asserts.
+    * entirely from the store's committed generations. The index's
+    * recorded LSH parameters must match the requested ones (refused
+    * loudly otherwise). Output: (new_id, corpus_id, jaccard), identical
+    * to [[minhashPairsAgainst]] on the same frames — which is exactly
+    * what the d13 oracle asserts.
     */
   def minhashPairsAgainstIndex(batch: DataFrame, idCol: String,
       textCol: String, path: String, minJaccard: Double, nTables: Int = 8,
       rowsPerBand: Int = 3): DataFrame = {
-    val meta = new String(
-      readSidecarBytes(batch.sparkSession, path, "_graft_index.json"), "UTF-8")
-    val expected = s"""{"minJaccard": $minJaccard, "nTables": $nTables, """ +
-      s""""rowsPerBand": $rowsPerBand, "bands": ${bandsFor(minJaccard, nTables, rowsPerBand)}}"""
-    require(meta == expected,
-      s"index at $path was built with $meta, requested $expected")
-    val spark = batch.sparkSession
-    val (bShingled, bKeys) = shingleAndBand(batch, idCol, textCol,
-      bandsFor(minJaccard, nTables, rowsPerBand), rowsPerBand)
-    val cKeys = spark.read.parquet(s"$path/bands")
-    // tombstoned docs are excluded merge-on-read style: one broadcast
-    // anti-join against the 1-row/doc hashes table is sufficient — the
-    // candidate join is INNER on corpus_id, so a dead doc's band keys can
-    // never reach the output once its hashes row is gone
-    val cHashes = readTombstones(spark, path) match {
-      case Some(t) => spark.read.parquet(s"$path/hashes")
-        .join(broadcast(t), Seq("id"), "left_anti")
-      case None => spark.read.parquet(s"$path/hashes")
-    }
-    val candKeys = bKeys.as("a").join(cKeys.as("b"), col("a.bk") === col("b.bk"))
+    val p = minhashParams(minJaccard, nTables, rowsPerBand)
+    val store = openMinhash(batch.sparkSession, path, p)
+    val (bShingled, bKeys) =
+      shingleAndBand(batch, idCol, textCol, p.bands, rowsPerBand)
+    // tombstoned docs are excluded merge-on-read on the 1-row/doc hashes
+    // table alone: the candidate join is INNER on corpus_id, so a dead
+    // doc's band keys can never reach the output once its hashes row is gone
+    val candKeys = bKeys.as("a")
+      .join(store.table("bands").as("b"), col("a.bk") === col("b.bk"))
       .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
       .distinct()
     val cand = candKeys
       .join(bShingled.select(col("id").as("new_id"), col("hs").as("ha")), "new_id")
-      .join(cHashes.select(col("id").as("corpus_id"), col("hs").as("hb")), "corpus_id")
+      .join(store.live("hashes").select(col("id").as("corpus_id"),
+        col("hs").as("hb")), "corpus_id")
     verifyJaccard(cand, minJaccard)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
@@ -772,9 +701,7 @@ object Dedup {
     * (appends) or shrinks (tombstones) costs only the join — the
     * economics that make "re-check contamination per eval refresh"
     * viable at all. Both stores' LSH parameters must match the requested
-    * ones (same loud refusal as [[minhashPairsAgainstIndex]] — and hence
-    * each other: band keys from different (θ, nTables, r) are
-    * incomparable key spaces). Tombstones on BOTH sides are honored
+    * ones (and hence each other). Tombstones on BOTH sides are honored
     * merge-on-read, same mechanism as single-index queries.
     * Output: (a_id, b_id, jaccard) — exact Jaccard ≥ θ, ids from the
     * `pathA` / `pathB` store respectively.
@@ -782,30 +709,17 @@ object Dedup {
   def minhashPairsIndexVsIndex(spark: SparkSession, pathA: String,
       pathB: String, minJaccard: Double, nTables: Int = 8,
       rowsPerBand: Int = 3): DataFrame = {
-    val expected = s"""{"minJaccard": $minJaccard, "nTables": $nTables, """ +
-      s""""rowsPerBand": $rowsPerBand, "bands": ${bandsFor(minJaccard, nTables, rowsPerBand)}}"""
-    for (p <- Seq(pathA, pathB)) {
-      val meta = new String(
-        readSidecarBytes(spark, p, "_graft_index.json"), "UTF-8")
-      require(meta == expected,
-        s"index at $p was built with $meta, requested $expected")
-    }
-    def liveHashes(path: String): DataFrame = {
-      val h = spark.read.parquet(s"$path/hashes")
-      readTombstones(spark, path) match {
-        case Some(t) => h.join(broadcast(t), Seq("id"), "left_anti")
-        case None => h
-      }
-    }
-    val candKeys = spark.read.parquet(s"$pathA/bands").as("a")
-      .join(spark.read.parquet(s"$pathB/bands").as("b"),
-        col("a.bk") === col("b.bk"))
+    val p = minhashParams(minJaccard, nTables, rowsPerBand)
+    val a = openMinhash(spark, pathA, p)
+    val b = openMinhash(spark, pathB, p)
+    val candKeys = a.table("bands").as("a")
+      .join(b.table("bands").as("b"), col("a.bk") === col("b.bk"))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
       .distinct()
     val cand = candKeys
-      .join(liveHashes(pathA).select(col("id").as("a_id"),
+      .join(a.live("hashes").select(col("id").as("a_id"),
         col("hs").as("ha")), "a_id")
-      .join(liveHashes(pathB).select(col("id").as("b_id"),
+      .join(b.live("hashes").select(col("id").as("b_id"),
         col("hs").as("hb")), "b_id")
     verifyJaccard(cand, minJaccard)
       .select(col("a_id"), col("b_id"), col("jaccard"))

@@ -512,7 +512,7 @@ object Similarity {
     }: Unit
   }
 
-  // ------------------------------------------ IVF store meta sidecar ---
+  // ------------------------------------------------------ IVF store ---
 
   /** Fit-time (or current) HEALTH of an IVF index — the two quantities
     * that erode under sustained fixed-quantizer appends (round-16
@@ -536,131 +536,40 @@ object Similarity {
   final case class IvfHealth(n: Long, occMaxOverMean: Double,
       meanResidual: Double)
 
-  /** The `_graft_index.json` sidecar, now a MANIFEST (round-17): `gens`
-    * lists the LIVE inverted generations — readers resolve exactly
-    * those directories, so a crashed append/compaction's orphan dirs
-    * are invisible until the meta write commits them (the lakehouse
-    * manifest pattern, scaled down to one JSON file; the meta write is
-    * the single commit point for every store mutation). `health` is the
-    * FIT-TIME baseline [[ivfIndexHealth]] measures drift against;
-    * `epoch` namespaces incremental-compaction rewrite dirs.
-    */
+  /** The IVF payload's manifest params: the quantizer's shape and the
+    * FIT-TIME health baseline [[ivfIndexHealth]] measures drift against. */
+  final case class IvfParams(nCells: Int, dim: Int, health: Option[IvfHealth])
+
+  /** The IVF payload of the generational store
+    * ([[graft.util.IndexStore]]): per generation, the `inverted` lists
+    * (neighbor_id, emb, cluster); once per build, the `centroids` table. */
+  private[graft] val ivfStore = new graft.util.IndexStore.Layout[IvfParams](
+    "ivf", "neighbor_id", Seq("inverted"), Seq("centroids"))
+
+  /** The IVF store's manifest as one flat value: the committed `gens`,
+    * the maintenance `epoch` and the [[IvfParams]] — a view over
+    * [[graft.util.IndexStore.Manifest]]. */
   final case class IvfMeta(nCells: Int, dim: Int, gens: Seq[String],
       epoch: Int, health: Option[IvfHealth])
 
-  private def metaMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def toMeta(m: graft.util.IndexStore.Manifest[IvfParams]): IvfMeta =
+    IvfMeta(m.params.nCells, m.params.dim, m.gens, m.epoch, m.params.health)
 
-  /** Serialized through Jackson, never string interpolation (round-17
-    * advice: an interpolated manifest with a `"`-bearing generation name
-    * or a non-finite health double parses back as invalid JSON — the
-    * commit "succeeds" and every subsequent read fails, bricking the
-    * store). Non-finite health is refused HERE as a second layer:
-    * [[computeIvfHealth]] already maps the one legitimate NaN source
-    * (zero-vector cosine) to a defined residual, so a non-finite value
-    * reaching the commit point is a bug upstream, not data.
-    */
-  def writeIvfMeta(spark: SparkSession, path: String, meta: IvfMeta): Unit = {
-    val root = metaMapper.createObjectNode()
-    root.put("kind", "ivf")
-    root.put("nCells", meta.nCells)
-    root.put("dim", meta.dim)
-    val g = root.putArray("gens")
-    meta.gens.foreach(g.add)
-    root.put("epoch", meta.epoch)
-    meta.health.foreach { h =>
-      require(java.lang.Double.isFinite(h.occMaxOverMean) &&
-        java.lang.Double.isFinite(h.meanResidual),
-        s"non-finite IVF health must not reach the manifest commit: $h")
-      val hn = root.putObject("health")
-      hn.put("n", h.n)
-      hn.put("occMaxOverMean", h.occMaxOverMean)
-      hn.put("meanResidual", h.meanResidual): Unit
-    }
-    graft.util.IndexSidecar.writeBytesAtomic(spark, path, "_graft_index.json",
-      metaMapper.writeValueAsBytes(root))
-  }
+  private def toManifest(meta: IvfMeta): graft.util.IndexStore.Manifest[IvfParams] =
+    graft.util.IndexStore.Manifest(meta.gens, meta.epoch,
+      IvfParams(meta.nCells, meta.dim, meta.health))
 
-  /** The manifest COMMIT point for every mutation of a LIVE store
-    * (round-17 verdict ask 1): `mutate` is applied to a FRESH read of the
-    * manifest inside an exclusive lock, and the result publishes through
-    * one atomic rename — so two concurrent appends (or an append racing
-    * an incremental compaction's swap) serialize instead of the slower
-    * writer clobbering the faster one's already-published generation
-    * (the lost-update window the round-17 verdict flagged). The
-    * choreography per commit:
-    *
-    *  1. acquire `_graft_index.lock` (atomic create-if-absent, backoff,
-    *     stale-TTL breaking — [[graft.util.IndexSidecar.withLockFile]]);
-    *  2. re-read `_graft_index.json` — this is what a racing writer's
-    *     earlier commit becomes visible through;
-    *  3. apply `mutate` to the CURRENT manifest, publish via write-temp +
-    *     atomic rename (readers see old-complete or new-complete, never
-    *     partial — [[graft.util.IndexSidecar.writeBytesAtomic]]);
-    *  4. verify-after-write: read back and require the mutation landed
-    *     (belt-and-braces against a broken-stale-lock double admit);
-    *     retry the whole read-modify-write if not.
-    *
-    * Concurrency contract this buys: ANY number of concurrent appends and
-    * tombstones are safe against each other and against ONE maintenance
-    * job (incremental compaction / re-quantize swap); concurrent
-    * maintenance jobs must be externally scheduled one-at-a-time (their
-    * epoch-suffixed rewrite DIRS would collide — the usual lakehouse
-    * single-maintainer discipline), which the epoch check inside
-    * [[compactIvfGenerations]]'s mutate enforces loudly rather than
-    * silently.
-    */
+  def writeIvfMeta(spark: SparkSession, path: String, meta: IvfMeta): Unit =
+    graft.util.IndexStore.writeManifest(spark, path, ivfStore, toManifest(meta))
+
+  def readIvfMeta(spark: SparkSession, path: String): IvfMeta =
+    toMeta(graft.util.IndexStore.readManifest(spark, path, ivfStore))
+
+  /** A locked, verified manifest commit ([[graft.util.IndexStore.commit]]). */
   def mutateIvfMeta(spark: SparkSession, path: String)
-      (mutate: IvfMeta => IvfMeta): IvfMeta = {
-    graft.util.IndexSidecar.withLockFile(spark, path, "_graft_index.lock") {
-      var committed: Option[IvfMeta] = None
-      var attempts = 0
-      while (committed.isEmpty) {
-        attempts += 1
-        require(attempts <= 5,
-          s"manifest commit at $path kept losing verify-after-write — " +
-            "a writer is mutating the store outside the lock protocol")
-        val next = mutate(readIvfMeta(spark, path))
-        writeIvfMeta(spark, path, next)
-        if (readIvfMeta(spark, path) == next) committed = Some(next)
-      }
-      committed.get
-    }
-  }
-
-  /** Generation / batch ids must survive three layers verbatim: a path
-    * segment (`gen=<id>`), a JSON string (the manifest), and a Spark
-    * leaf-dir read. ASCII letters/digits/._- cover all three with no
-    * escaping anywhere; everything else is refused loudly (round-17
-    * advice: the old '/'/'='/whitespace blocklist let a '"' through to
-    * brick the interpolated manifest).
-    */
-  private def requireBatchId(batchId: String, forbidBase: Boolean): Unit = {
-    require(batchId.nonEmpty && !(forbidBase && batchId == "base") &&
-      batchId.forall(c => c.toInt < 128 &&
-        (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')),
-      s"batchId must be a non-empty ASCII [A-Za-z0-9._-] token" +
-        s"${if (forbidBase) ", not 'base'" else ""}: '$batchId'")
-  }
-
-  def readIvfMeta(spark: SparkSession, path: String): IvfMeta = {
-    require(graft.util.IndexSidecar.exists(spark, path, "_graft_index.json"),
-      s"no IVF index meta at $path — store missing or half-written")
-    val node = metaMapper.readTree(new String(
-      graft.util.IndexSidecar.readBytes(spark, path, "_graft_index.json"),
-      "UTF-8"))
-    val gens =
-      if (node.has("gens"))
-        (0 until node.get("gens").size()).map(node.get("gens").get(_).asText())
-      else Seq("base") // pre-manifest store: the only layout it could have
-    val health =
-      if (node.has("health")) {
-        val h = node.get("health")
-        Some(IvfHealth(h.get("n").asLong(),
-          h.get("occMaxOverMean").asDouble(), h.get("meanResidual").asDouble()))
-      } else None
-    IvfMeta(node.get("nCells").asInt(), node.get("dim").asInt(), gens,
-      if (node.has("epoch")) node.get("epoch").asInt() else 0, health)
-  }
+      (mutate: IvfMeta => IvfMeta): IvfMeta =
+    toMeta(graft.util.IndexStore.commit(spark, path, ivfStore)(m =>
+      toManifest(mutate(toMeta(m)))))
 
   /** Measure [[IvfHealth]] of an inverted file against its quantizer —
     * one distributed aggregation; the centroid table rides as a literal
@@ -673,7 +582,7 @@ object Similarity {
     val centArr = typedLit(centroids)
     // nanvl: a zero vector's cosine is 0/0 = NaN; "the quantizer explains
     // none of it" is residual 1, and a NaN here must never reach the
-    // manifest commit (writeIvfMeta refuses non-finite health loudly)
+    // manifest commit (the store refuses non-finite params loudly)
     val row = inverted
       .select(col("cluster"),
         nanvl(lit(1.0d) - call_function("cosine_sim", col("emb"),
@@ -704,97 +613,57 @@ object Similarity {
     (baseline, computeIvfHealth(spark, idx.inverted, idx.centroids))
   }
 
-  /** Persist an [[IvfIndex]]: the inverted lists (cluster-keyed member
-    * embeddings — the full-pass assignment output, the expensive part)
-    * as parquet, the centroid table (nClusters × dim floats, driver-sized
-    * by construction) alongside it. At 100 TB the inverted table would
-    * additionally be bucketed/partitioned BY `cluster` so a probe's
-    * nprobe cluster scan prunes to exactly those files; plain parquet
-    * keeps the gate portable. Round-trip fidelity is float-exact, which
-    * the s06 gate asserts search-result-for-search-result.
-    *
-    * LAYOUT (round-16 — lifecycle parity with the minhash store d13/d19):
-    * the inverted lists live in GENERATION directories
-    * (`inverted/gen=base` here; [[appendToIvfIndex]] adds
-    * `gen=<batchId>` shards), takedowns in an append-only
-    * `tombstones/gen=<batchId>` id list, and the `_graft_index.json`
-    * meta sidecar is written LAST so a half-written store fails loudly
-    * on first read instead of answering from partial data. A (re)build
-    * REPLACES the whole index — surviving generations or a stale
-    * takedown list from a previous build at the same path would silently
-    * leak into the new one, so both trees are dropped first (the d13
-    * rebuild rule).
+  /** Persist an [[IvfIndex]] as a generational store
+    * ([[graft.util.IndexStore.build]] — a rebuild replaces the whole
+    * store, the manifest commits last): the inverted lists (cluster-keyed
+    * member embeddings — the full-pass assignment output, the expensive
+    * part) as generation `base`, the centroid table (nClusters × dim
+    * floats, driver-sized by construction) alongside it. At 100 TB the
+    * inverted table would additionally be bucketed/partitioned BY
+    * `cluster` so a probe's nprobe cluster scan prunes to exactly those
+    * files; plain parquet keeps the gate portable. Round-trip fidelity is
+    * float-exact, which the s06 gate asserts search-result-for-search-result.
     */
   def writeIvfIndex(idx: IvfIndex, path: String): Unit = {
     val spark = idx.inverted.sparkSession
     import spark.implicits._
-    // The META sidecar is deleted FIRST (round-16 advice): an in-place
-    // rebuild that crashed between the inverted write and the centroids
-    // write would otherwise pair new lists with the previous quantizer
-    // under a still-valid sidecar — readIvfCentroids' guard would pass
-    // and searches would be silently wrong. Dropping the sidecar up
-    // front (and every data subtree, centroids included — the minhash
-    // store's delete-all-upfront rule) makes ANY mid-rebuild crash leave
-    // a store that refuses loudly until the final meta write re-commits.
-    graft.util.IndexSidecar.deleteIfExists(spark, path, "_graft_index.json")
-    // a crashed mutation's leftover lock dies with the store it locked —
-    // a rebuild must not inherit up-to-TTL blocking from the old store
-    graft.util.IndexSidecar.deleteIfExists(spark, path, "_graft_index.lock")
-    for (sub <- Seq("inverted", "tombstones", "centroids"))
-      graft.util.IndexSidecar.deleteIfExists(spark, path, sub)
-    idx.inverted.select("neighbor_id", "emb", "cluster")
-      .write.mode("overwrite").parquet(s"$path/inverted/gen=base")
-    idx.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cid", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val dim = idx.centroids.headOption.map(_.length).getOrElse(0)
-    // fit-time health baseline: measured on the just-written generation
-    // (one agg job per store PUBLISH — store writes are memoized, so
-    // this is paid once per index, not per search)
-    val health = computeIvfHealth(spark,
-      spark.read.parquet(s"$path/inverted/gen=base"), idx.centroids)
-    writeIvfMeta(spark, path, IvfMeta(idx.centroids.length, dim,
-      Seq("base"), 0, Some(health)))
+    graft.util.IndexStore.build(spark, path, ivfStore) { dir =>
+      idx.inverted.select("neighbor_id", "emb", "cluster")
+        .write.mode("overwrite").parquet(dir("inverted"))
+      idx.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
+        .toDF("cid", "cv").coalesce(1)
+        .write.mode("overwrite").parquet(dir("centroids"))
+      // fit-time health baseline: measured on the just-written generation
+      // (one agg job per store PUBLISH — store writes are memoized, so
+      // this is paid once per index, not per search)
+      IvfParams(idx.centroids.length,
+        idx.centroids.headOption.map(_.length).getOrElse(0),
+        Some(computeIvfHealth(spark, spark.read.parquet(dir("inverted")),
+          idx.centroids)))
+    }
   }
 
-  /** The stored coarse quantizer alone — nClusters rows of index
-    * metadata, not data. Refuses a store whose meta sidecar is missing
-    * (the write-meta-LAST choreography makes that the signature of a
-    * half-written store). */
-  def readIvfCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
-    require(graft.util.IndexSidecar.exists(spark, path, "_graft_index.json"),
-      s"no IVF index meta at $path — store missing or half-written")
-    spark.read.parquet(s"$path/centroids")
+  private def centroidsOf(store: graft.util.IndexStore.Snapshot[IvfParams])
+      : Array[Array[Float]] =
+    store.fixed("centroids")
       .select("cid", "cv").collect()
       .sortBy(_.getInt(0))
       .map(_.getSeq[Float](1).toArray)
-  }
 
-  /** Load a [[writeIvfIndex]] store: all generations of the inverted
-    * file, with tombstoned ids excluded MERGE-ON-READ (one broadcast
-    * anti-join against the takedown list — dead vectors stop surfacing
-    * the moment the tombstone lands, physically reclaimed at the next
-    * [[compactIvfIndex]]; the d21 delete-vector pattern on the inverted
-    * file). The explicit select drops the `gen` partition-discovery
-    * column, so a one-generation and a many-generation store present the
-    * identical schema. */
+  /** The stored coarse quantizer alone — nClusters rows of index
+    * metadata, not data. Refuses a store without a committed manifest. */
+  def readIvfCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
+    centroidsOf(graft.util.IndexStore.open(spark, path, ivfStore))
+
+  /** Load a [[writeIvfIndex]] store: the committed generations of the
+    * inverted file with tombstoned ids excluded merge-on-read
+    * ([[graft.util.IndexStore.Snapshot.live]]) — an orphan generation
+    * left by a crashed append is invisible, dead vectors stop surfacing
+    * the moment the tombstone lands. */
   def readIvfIndex(spark: SparkSession, path: String): IvfIndex = {
-    val centroids = readIvfCentroids(spark, path)
-    // MANIFEST read (round-17): resolve exactly the generations the meta
-    // sidecar committed — an orphan dir left by a crashed append or
-    // incremental compaction (published data, unreached commit point) is
-    // invisible rather than silently doubled into results.
-    val meta = readIvfMeta(spark, path)
-    val inv = spark.read
-      .parquet(meta.gens.map(g => s"$path/inverted/gen=$g"): _*)
-      .select("neighbor_id", "emb", "cluster")
-    val live =
-      if (graft.util.IndexSidecar.exists(spark, path, "tombstones"))
-        inv.join(broadcast(spark.read.parquet(s"$path/tombstones")
-            .select(col("id").as("neighbor_id"))),
-          Seq("neighbor_id"), "left_anti")
-      else inv
-    IvfIndex(live, centroids)
+    val store = graft.util.IndexStore.open(spark, path, ivfStore)
+    IvfIndex(store.live("inverted").select("neighbor_id", "emb", "cluster"),
+      centroidsOf(store))
   }
 
   /** Nearest-centroid assignment at a FIXED coarse quantizer — the
@@ -816,104 +685,48 @@ object Similarity {
   /** Append a new shard to a [[writeIvfIndex]] store — incremental index
     * MAINTENANCE for the vector store (the round-15 verdict's #1: the
     * embedding store was the one 100 TB asset still requiring a full
-    * refit on new data; the d19 generation-dir choreography applies
-    * nearly verbatim). New vectors are assigned to the EXISTING stored
+    * refit on new data). New vectors are assigned to the EXISTING stored
     * centroids ([[assignToCentroids]] — no refit; quantizer drift is
-    * compaction-with-rebuild territory, out of scope by design) and land
-    * as one `inverted/gen=<batchId>` generation — a single parquet
-    * write, so the commit choreography is simpler than minhash's
-    * two-table hashes-first/bands-last: either the generation directory
-    * publishes complete or the write fails whole. Retrying the same
-    * `batchId` OVERWRITES the generation — idempotent recovery, no
-    * duplicate rows. Search-after-append over the grown store is
-    * IDENTICAL to search over an index whose inverted file was built
-    * from the union corpus at the same fixed quantizer — the s14 oracle
-    * pins that invisibility row-for-row (at fixed centroids, a vector's
-    * cell does not depend on any other vector, so append ≡ rebuild
-    * exactly; only a reFIT could differ, and append promises not to).
+    * [[requantizeIvfIndex]] territory, out of scope by design) and land
+    * as one new store generation, committed by the manifest
+    * ([[graft.util.IndexStore.append]]); retrying the same `batchId`
+    * overwrites it and commits once. Search-after-append over the grown
+    * store is IDENTICAL to search over an index whose inverted file was
+    * built from the union corpus at the same fixed quantizer — the s14
+    * oracle pins that invisibility row-for-row (at fixed centroids, a
+    * vector's cell does not depend on any other vector, so append ≡
+    * rebuild exactly; only a reFIT could differ, and append promises not
+    * to).
     */
   def appendToIvfIndex(batch: DataFrame, idCol: String, embCol: String,
       path: String, batchId: String): Unit = {
-    requireBatchId(batchId, forbidBase = true)
     val spark = batch.sparkSession
-    val centroids = readIvfCentroids(spark, path)
-    assignToCentroids(spark, batch, idCol, embCol, centroids)
-      .write.mode("overwrite").parquet(s"$path/inverted/gen=$batchId")
-    // COMMIT: the generation joins the manifest only after its data is
-    // fully published (meta-LAST — a crash above leaves an orphan dir
-    // that manifest readers never see; retrying the same batchId
-    // overwrites it and commits once). The commit runs under the
-    // manifest lock against a FRESH read ([[mutateIvfMeta]]) so a racing
-    // append's or compaction's earlier commit is preserved, never
-    // clobbered; the contains-check keeps a retried append from
-    // double-listing its generation.
-    mutateIvfMeta(spark, path) { m =>
-      if (m.gens.contains(batchId)) m else m.copy(gens = m.gens :+ batchId)
-    }: Unit
+    graft.util.IndexStore.append(spark, path, ivfStore, batchId) { (store, dir) =>
+      assignToCentroids(spark, batch, idCol, embCol, centroidsOf(store))
+        .write.mode("overwrite").parquet(dir("inverted"))
+    }
   }
 
   /** TOMBSTONE vectors in a [[writeIvfIndex]] store — the DELETE of the
-    * vector-index lifecycle (takedowns, right-to-be-forgotten over
-    * embedded content): an append-only id list in its own
-    * `tombstones/gen=<batchId>` generation, never an in-place rewrite of
-    * the inverted lists (at 100 TB that is a full-table job per takedown
-    * batch; the id-list anti-join is a broadcast per query). Consumers
-    * exclude dead ids merge-on-read ([[readIvfIndex]]); the rows are
-    * physically reclaimed at the next [[compactIvfIndex]] — d20/d21's
-    * lakehouse delete-vector pattern verbatim on the inverted file.
-    * Idempotent per batchId (overwrite); duplicate ids across
-    * generations are harmless (anti-join semantics).
+    * vector-index lifecycle ([[graft.util.IndexStore.tombstone]]):
+    * consumers exclude dead ids merge-on-read ([[readIvfIndex]]); the
+    * rows are physically reclaimed at the next [[compactIvfIndex]].
     */
   def tombstoneIvfIndex(spark: SparkSession, path: String,
-      ids: DataFrame, idCol: String, batchId: String): Unit = {
-    requireBatchId(batchId, forbidBase = false)
-    // A takedown against a missing (or typo'd) store path must fail
-    // loudly, not create an orphan tombstones tree and report success —
-    // a right-to-be-forgotten request that silently did nothing
-    // (round-16 advice; mirrors appendToIvfIndex's readIvfCentroids
-    // guard, which enforces the same meta-sidecar precondition).
-    require(graft.util.IndexSidecar.exists(spark, path, "_graft_index.json"),
-      s"no IVF index meta at $path — cannot tombstone a missing store")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("overwrite").parquet(s"$path/tombstones/gen=$batchId")
-  }
+      ids: DataFrame, idCol: String, batchId: String): Unit =
+    graft.util.IndexStore.tombstone(spark, path, ids, idCol, batchId)
 
   /** COMPACT a [[writeIvfIndex]] store into a fresh single-generation
-    * index at `destPath` — the maintenance step that closes the
-    * build → append → tombstone → query lifecycle: many per-shard
-    * generations (small-file pressure) rewrite as one `gen=base`, live
-    * tombstones become PHYSICAL deletes (the destination starts with an
-    * empty takedown list), and the centroids copy over unchanged — pure
-    * IO, the k-means fit is never re-paid, which is the entire economics
-    * of the persisted index. Crash-safe by construction (the d20
-    * version-swap pattern): the destination is a NEW directory, the
-    * source is read-only throughout, and the meta sidecar is written
-    * LAST so a half-written destination refuses loudly on first use.
-    * The s16 oracle pins compacted-search ≡ grown-store-search ≡ the
-    * fixed-quantizer rebuild, and that the physical row count equals the
-    * live count (distinguishing real reclamation from merge-on-read
-    * masking).
+    * index at `destPath` ([[graft.util.IndexStore.compact]]): live rows
+    * rewrite as one generation, tombstones become physical deletes, and
+    * the centroids and the fit-time health baseline copy over unchanged
+    * — the k-means fit is never re-paid. The s16 oracle pins
+    * compacted-search ≡ grown-store-search ≡ the fixed-quantizer
+    * rebuild, and that the physical row count equals the live count.
     */
   def compactIvfIndex(spark: SparkSession, srcPath: String,
-      destPath: String): Unit = {
-    require(srcPath != destPath,
-      "compaction writes a NEW index directory (version-swap pattern); " +
-        "in-place compaction would lose crash safety")
-    val meta = readIvfMeta(spark, srcPath)
-    val live = readIvfIndex(spark, srcPath) // merge-on-read: tombstones applied
-    graft.util.IndexSidecar.deleteIfExists(spark, destPath, "_graft_index.json")
-    for (sub <- Seq("inverted", "tombstones", "centroids"))
-      graft.util.IndexSidecar.deleteIfExists(spark, destPath, sub)
-    live.inverted.write.mode("overwrite").parquet(s"$destPath/inverted/gen=base")
-    spark.read.parquet(s"$srcPath/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$destPath/centroids")
-    // dest manifest: single fresh generation (NOT the source's gens list —
-    // carrying it over would point the manifest at dirs that don't exist
-    // here); the fit-time health baseline carries over unchanged because
-    // compaction copies the quantizer, never refits it.
-    writeIvfMeta(spark, destPath,
-      meta.copy(gens = Seq("base"), epoch = 0))
-  }
+      destPath: String): Unit =
+    graft.util.IndexStore.compact(spark, srcPath, destPath, ivfStore)
 
   /** RE-QUANTIZE a [[writeIvfIndex]] store into a fresh index at
     * `destPath` — the drift-repair step a long-lived vector store
@@ -928,7 +741,7 @@ object Similarity {
     * across the whole rebuilt store), and the result publishes as a new
     * single-generation index whose fit-time health baseline is measured
     * on the repaired layout. Crash-safe like [[compactIvfIndex]]: new
-    * directory, read-only source, meta-last.
+    * directory, read-only source, manifest written last.
     *
     * Cost shape at 100 TB: one k-means fit on a BOUNDED sample
     * (`maxFitRows`) + one assignment pass over the live rows + one
@@ -1006,97 +819,21 @@ object Similarity {
     MaintenanceOutcome(degraded, h0, h1)
   }
 
-  /** Per-generation accounting + outcome of one [[compactIvfGenerations]]
-    * run: which generations were rewritten (old → new manifest name),
-    * the live rows that paid rewrite IO, the dead rows physically
-    * reclaimed, and the generations left byte-untouched.
-    */
-  final case class GenCompaction(rewritten: Seq[(String, String)],
-      rowsRewritten: Long, rowsReclaimed: Long, coldGens: Seq[String])
+  type GenCompaction = graft.util.IndexStore.GenCompaction
 
-  /** INCREMENTAL (generational) compaction — the round-16 verdict's
-    * ask 2: [[compactIvfIndex]] rewrites the FULL payload (measured
-    * 184 s unmemoized at 200 k vectors) even when one small generation
-    * holds all the tombstoned rows. This compacts ONLY generations
-    * whose dead fraction exceeds `deadFracThreshold`: each hot
-    * generation's live rows rewrite under a new epoch-suffixed manifest
-    * name, cold generations stay byte-identical on disk, and the single
-    * meta-sidecar write is the COMMIT (manifest swap — the lakehouse
-    * rewrite-then-swap-manifests pattern on one JSON file): a crash
-    * before it leaves orphan rewrite dirs no manifest reader resolves;
-    * a crash after it leaves superseded dirs whose deletion below is
-    * best-effort cleanup, not correctness. Rewrite IO is therefore
-    * ∝ the hot generations' LIVE volume — dead-fraction-proportional,
-    * never store-proportional (the d20 band-IO economics, applied
-    * in place).
-    *
-    * The tombstone list is retained as-is: cold generations may still
-    * hold dead rows under the threshold, and an id absent from every
-    * generation anti-joins to nothing (harmless). Full reclamation —
-    * including the takedown list reset — remains [[compactIvfIndex]]'s
-    * job; this is the cheap steady-state maintenance between its runs.
+  /** INCREMENTAL (generational) compaction of a [[writeIvfIndex]] store
+    * ([[graft.util.IndexStore.compactGenerations]]) — the round-16
+    * verdict's ask 2: [[compactIvfIndex]] rewrites the FULL payload
+    * (measured 184 s unmemoized at 200 k vectors) even when one small
+    * generation holds all the tombstoned rows. This rewrites ONLY
+    * generations whose dead fraction exceeds `deadFracThreshold`, under
+    * epoch-suffixed names swapped in by one manifest commit; cold
+    * generations stay byte-identical on disk.
     */
   def compactIvfGenerations(spark: SparkSession, path: String,
-      deadFracThreshold: Double): GenCompaction = {
-    val meta = readIvfMeta(spark, path)
-    if (!graft.util.IndexSidecar.exists(spark, path, "tombstones"))
-      return GenCompaction(Nil, 0L, 0L, meta.gens)
-    val tomb = broadcast(spark.read.parquet(s"$path/tombstones")
-      .select(col("id").as("neighbor_id")).distinct())
-    // one scan of the manifest generations → per-gen (total, dead); the
-    // result is ≤ |gens| rows of driver metadata. Each generation is read
-    // as a direct leaf dir and tagged with lit(g) — mirroring
-    // readIvfIndex — rather than through `basePath` partition discovery,
-    // whose TYPE INFERENCE coerces a numeric or date-like batchId
-    // ('2024', '01') to int/date and breaks the getString below
-    // (round-17 advice).
-    val inv = meta.gens.map { g =>
-      spark.read.parquet(s"$path/inverted/gen=$g")
-        .select(col("neighbor_id"), lit(g).as("gen"))
-    }.reduce(_ unionByName _)
-    val stats = inv
-      .join(tomb.withColumn("dead", lit(1L)), Seq("neighbor_id"), "left")
-      .groupBy("gen")
-      .agg(count(lit(1)).as("total"),
-        coalesce(sum("dead"), lit(0L)).as("dead"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val hot = stats.filter { case (_, total, dead) =>
-      dead > 0 && dead.toDouble / total > deadFracThreshold }
-    var rowsRewritten = 0L
-    var rowsReclaimed = 0L
-    val renames = hot.map { case (g, total, dead) =>
-      val newG = s"${g}.c${meta.epoch + 1}"
-      spark.read.parquet(s"$path/inverted/gen=$g")
-        .join(tomb, Seq("neighbor_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$path/inverted/gen=$newG")
-      rowsRewritten += total - dead
-      rowsReclaimed += dead
-      g -> newG
-    }
-    val renameMap = renames.toMap
-    // COMMIT: one locked sidecar swap renames the rewritten gens. The
-    // mutate applies the rename map to the manifest AS IT IS AT COMMIT
-    // TIME, not as it was at the stats read — a generation appended while
-    // the hot rewrites ran passes through untouched (concurrent appends
-    // are safe against one maintenance job); a SECOND maintenance job
-    // having advanced the epoch in between is refused loudly (its
-    // epoch-suffixed rewrite dirs would collide with ours — the
-    // single-maintainer discipline, enforced instead of assumed).
-    mutateIvfMeta(spark, path) { cur =>
-      require(cur.epoch == meta.epoch,
-        s"concurrent maintenance detected at $path: epoch moved " +
-          s"${meta.epoch} -> ${cur.epoch} during incremental compaction; " +
-          "maintenance jobs must run one at a time")
-      cur.copy(gens = cur.gens.map(g => renameMap.getOrElse(g, g)),
-        epoch = cur.epoch + 1)
-    }: Unit
-    // post-commit cleanup of superseded dirs (best-effort by design)
-    renames.foreach { case (g, _) =>
-      graft.util.IndexSidecar.deleteIfExists(spark, path, s"inverted/gen=$g") }
-    GenCompaction(renames, rowsRewritten, rowsReclaimed,
-      meta.gens.filterNot(renameMap.contains))
-  }
+      deadFracThreshold: Double): GenCompaction =
+    graft.util.IndexStore.compactGenerations(spark, path, ivfStore,
+      deadFracThreshold)
 
   /** The `nprobe` nearest clusters per probe: (p_id, p_emb, cluster) rows.
     * The ranking runs through the fused [[graft.functions.NearestCells]]

@@ -2800,7 +2800,7 @@ object LlmOps {
 
   /** s14 — persisted IVF index APPEND ([[Similarity.appendToIvfIndex]] —
     * the vector-store twin of d19): the store is built from the base
-    * shard, the append shard lands as its own `gen=shard1` generation
+    * shard, the append shard lands as its own generation `shard1`
     * with vectors assigned to the EXISTING stored centroids (no refit —
     * one expression pass, no k-means), and the search over the grown
     * store must equal, ROW FOR ROW, the search over an index whose
@@ -2899,8 +2899,8 @@ object LlmOps {
       val stored = Similarity.readIvfIndex(s, dest)
       val liveInv = unionInv.filter(col("neighbor_id") % 4 =!= 1)
       val mem = Similarity.IvfIndex(liveInv, idxBase.centroids)
-      val phys = s.read.parquet(s"$dest/inverted")
-        .agg(count(lit(1)).as("n_phys"))
+      val phys = graft.util.IndexStore.open(s, dest, Similarity.ivfStore)
+        .table("inverted").agg(count(lit(1)).as("n_phys"))
       val live = liveInv.agg(count(lit(1)).as("n_live"))
       storeVsMem(s, stored, mem, probes, np)
         .agg(count(lit(1)).as("n_rows"),
@@ -2909,7 +2909,7 @@ object LlmOps {
         .crossJoin(phys).crossJoin(live)
         .select(col("n_rows"), col("n_mismatch"),
           (col("n_phys") === col("n_live")).as("physical_rows_match_live"),
-          lit(!graft.util.IndexSidecar.exists(s, dest, "tombstones"))
+          lit(!graft.util.IndexStore.hasTombstones(s, dest))
             .as("tombstones_reset"))
     })
 
@@ -2929,7 +2929,7 @@ object LlmOps {
     * at every measured dir, sf0.001 through gsf10, e.g. gsf1 skew
     * 4.03 → 170.6 → 33.1; +4 is near-unrepairable, skew 170.68 →
     * 170.65), which crowds one region of the fixed quantizer. The query measures the erosion against the fit-time
-    * baseline persisted in the meta sidecar (occupancy skew AND mean
+    * baseline persisted in the store manifest (occupancy skew AND mean
     * residual must both strictly degrade — `drift_degrades_health`),
     * repairs it with a re-quantize to a fresh store (both metrics must
     * strictly recover — `requantize_repairs_health`; the repaired
@@ -2977,7 +2977,7 @@ object LlmOps {
       }: Unit
       // health: fit-time baseline vs the drifted live store (one agg
       // job), vs the repaired store's publish-time baseline (no job —
-      // measured once at requantize publish, read from the sidecar)
+      // measured once at requantize publish, read from the manifest)
       val (h0, h1) = Similarity.ivfIndexHealth(s, path)
       val h2 = Similarity.readIvfMeta(s, dest).health.get
       val destCentroids = Similarity.readIvfCentroids(s, dest)
@@ -3061,16 +3061,17 @@ object LlmOps {
       // headOption (round-17 advice): an empty rewrite set (no generation
       // over threshold — possible at a pathological slice) must fail the
       // contract booleans, not crash the spec with NoSuchElementException
+      val store = graft.util.IndexStore.open(s, path, Similarity.ivfStore)
       val phys = report.rewritten.headOption match {
         case Some((_, rewrittenGen)) =>
-          s.read.parquet(s"$path/inverted/gen=$rewrittenGen")
+          store.generation("inverted", rewrittenGen)
             .agg(count(lit(1)).as("n_phys"),
               sum(when(col("neighbor_id") % 4 === 0, 1L).otherwise(0L))
                 .as("n_dead"))
         case None =>
           s.range(1).select(lit(-1L).as("n_phys"), lit(-1L).as("n_dead"))
       }
-      val coldPhys = s.read.parquet(s"$path/inverted/gen=base")
+      val coldPhys = store.generation("inverted", "base")
         .agg(count(lit(1)).as("n_cold"))
       val liveShard1 = shard1.filter(col("vec_id") % 4 =!= 0)
         .agg(count(lit(1)).as("n_live_hot"))
@@ -3122,7 +3123,7 @@ object LlmOps {
   /** s19 — CONCURRENT store mutations ([[Similarity.mutateIvfMeta]] —
     * the round-17 verdict's ask 1): the manifest that made every store
     * mutation crash-safe was a plain read-modify-write, so two writers
-    * racing on `_graft_index.json` could silently lose the slower one's
+    * racing on the manifest could silently lose the slower one's
     * already-published generation — exactly the deployment st25's
     * streaming ingest invites. The commit now serializes under the
     * store's lock file, re-reads the manifest inside the critical
@@ -3275,12 +3276,11 @@ object LlmOps {
         Similarity.writeIvfIndex(idx, okPath)
         Similarity.appendToIvfIndex(shard, "vec_id", "embedding",
           okPath, "shard1")
-        val bytesBefore = graft.util.IndexSidecar.readBytes(s, okPath,
-          "_graft_index.json")
+        val bytesBefore = graft.util.IndexStore.manifestBytes(s, okPath)
         val o2 = Similarity.maintainIvfIndex(s, okPath, okDest, 512)
         val untouched = java.util.Arrays.equals(bytesBefore,
-          graft.util.IndexSidecar.readBytes(s, okPath, "_graft_index.json")) &&
-          !graft.util.IndexSidecar.exists(s, okDest, "_graft_index.json")
+          graft.util.IndexStore.manifestBytes(s, okPath)) &&
+          !graft.util.IndexStore.committed(s, okDest)
         (o1, o2, untouched)
       }
       val repairedHealth = Similarity.readIvfMeta(s, driftDest).health.get

@@ -1427,7 +1427,7 @@ object StreamOps {
     * verdict's ask 3, closing the lifecycle/streaming gap): st24 proves
     * streaming SEARCH over the shared fitted index; this proves the
     * INGEST half — vectors arriving on a stream land in the persisted
-    * store as per-micro-batch generations (`gen=st<batchId>` — the d19
+    * store as per-micro-batch generations (`st<batchId>` — the d19
     * generation choreography keyed by the engine's batch id, which is
     * exactly how Structured Streaming sinks achieve idempotent retry:
     * a replayed batch overwrites its own generation and re-commits the
@@ -1539,11 +1539,11 @@ object StreamOps {
     * .compactIvfGenerations]] fired from inside the same foreachBatch
     * stream that is appending — the round-17 verdict's ask 4, closing
     * the maintenance half of the streaming index story on top of s19's
-    * commit safety): batch 0 appends `gen=st0`, batch 1 appends
-    * `gen=st1`, tombstones a quarter of st0's rows and runs the
+    * commit safety): batch 0 appends generation `st0`, batch 1
+    * appends `st1`, tombstones a quarter of st0's rows and runs the
     * incremental compaction MID-STREAM (st0 rewrites to `st0.c1`, the
     * manifest swaps while the stream is live), and batch 2 appends
-    * `gen=st2` against the SWAPPED manifest — the append's locked
+    * `st2` against the SWAPPED manifest — the append's locked
     * commit re-reads it, so the rename survives (without s19's
     * protocol, batch 2's commit could resurrect the pre-swap gens list
     * and double-serve st0's dead rows). Three declared terms:
@@ -1650,7 +1650,7 @@ object StreamOps {
     * BOTH row kinds on an `op` column — the CDC shape a changelog
     * source (Kafka compacted topic, Debezium feed) actually delivers —
     * and each micro-batch routes them: `op = 'i'` rows append as one
-    * `gen=st<batchId>` generation, `op = 'd'` rows become one tombstone
+    * generation `st<batchId>`, `op = 'd'` rows become one tombstone
     * batch ([[graft.llm.Similarity.tombstoneIvfIndex]] — merge-on-read,
     * no rewrite on the takedown path; reclamation stays with st26's
     * compaction). Three declared terms:

@@ -237,7 +237,7 @@ final class PredictionServer(
     * consistent with the pre-existing driver-local upload spool above,
     * but a MULTI-NODE deployment must point both spool and output at a
     * shared scheme-aware location (hdfs:///s3a://, resolved through the
-    * Hadoop FileSystem like graft.util.IndexSidecar does) or the part
+    * Hadoop FileSystem like graft.util.IndexStore does) or the part
     * files land on machines the handler can't see. The old collect()
     * path had no such assumption — it traded it for unbounded driver
     * heap; this trade is the right one for the single-node twin.

@@ -74,11 +74,13 @@ object ScaleProbe {
     timedP("d13", dir, "index_build")(
       Dedup.writeMinhashIndex(corpus, "doc_id", "text", s"$root/c", 0.5))
     spark.catalog.clearCache()
-    val keyN = spark.read.parquet(s"$root/c/bands").count()
+    def bands(p: String) =
+      graft.util.IndexStore.open(spark, p, Dedup.minhashStore).table("bands")
+    val keyN = bands(s"$root/c").count()
     Dedup.writeMinhashIndex(batch, "doc_id", "text", s"$root/b", 0.5)
     spark.catalog.clearCache()
-    val candN = spark.read.parquet(s"$root/b/bands").as("a")
-      .join(spark.read.parquet(s"$root/c/bands").as("b"),
+    val candN = bands(s"$root/b").as("a")
+      .join(bands(s"$root/c").as("b"),
         col("a.bk") === col("b.bk"))
       .select(col("a.id"), col("b.id")).distinct().count()
     val out1 = timedP("d13", dir, "match_run1")(
@@ -315,8 +317,7 @@ object ScaleProbe {
         f"occ_ratio=${h1.occMaxOverMean / h0.occMaxOverMean}%.3f " +
         f"res0=${h0.meanResidual}%.4f res1=${h1.meanResidual}%.4f " +
         f"res_ratio=${h1.meanResidual / h0.meanResidual}%.4f")
-      graft.util.IndexSidecar.deleteIfExists(spark, path, "inverted")
-      graft.util.IndexSidecar.deleteIfExists(spark, path, "centroids")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     }
   }
 

@@ -94,6 +94,23 @@ class NbrUnionSpec extends SparkSpec {
     }
   }
 
+  test("nbr_union keeps a forward edge whose score is null; a null-score " +
+      "reverse edge cannot rank and is dropped") {
+    GraftFunctions.ensureRegistered(spark)
+    import spark.implicits._
+    val edges = Seq[(Long, Long, Option[Double], Boolean)](
+      (1L, 2L, None, true), (1L, 3L, Some(0.5), true),
+      (1L, 4L, None, false), (1L, 5L, Some(0.9), false),
+      (6L, 7L, None, true))
+      .toDF("id", "nbr", "sim", "fwd")
+    val lists = edges.groupBy("id")
+      .agg(call_function("nbr_union", col("sim"), col("nbr"), col("fwd"),
+        lit(kBuild)).as("nbrs"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // the unfused chain kept forward pairs regardless of the score
+    lists shouldBe Map(1L -> Seq(2L, 3L, 5L), 6L -> Seq(7L))
+  }
+
   test("ivfSearch minScanPartitions spread is row-identical to the unspread scan") {
     val emb = corpus
     val idx = Similarity.buildIvfIndex(spark, emb, "id", "emb", 64)

@@ -334,8 +334,9 @@ class Round12OpsSpec extends SparkSpec {
         "base", 0.5)
   }
 
-  test("appendToMinhashIndex commit order: a half-landed append (hashes " +
-      "only, bands missing) is INVISIBLE to index queries") {
+  test("appendToMinhashIndex commit point: a half-landed append (both " +
+      "generation dirs written, manifest commit not reached) is INVISIBLE " +
+      "to index queries") {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val a = docs.filter(col("doc_id") % 3 === 0)
@@ -348,15 +349,17 @@ class Round12OpsSpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSeq
     graft.llm.Dedup.writeMinhashIndex(a, "doc_id", "text", s"$root/idx", 0.5)
     val baseline = rows(s"$root/idx")
-    // simulate the crash window: a full append, then the bands generation
-    // deleted — exactly the state a failure between the two writes leaves
-    // (hashes commit FIRST, bands LAST)
+    // simulate the crash window: a full append whose manifest commit never
+    // landed — both generation dirs published, the manifest as it was
+    // before the append (the manifest commit is the only commit point)
+    val manifest = java.nio.file.Paths.get(s"$root/idx/_graft_index.json")
+    val committed = java.nio.file.Files.readAllBytes(manifest)
     graft.llm.Dedup.appendToMinhashIndex(b, "doc_id", "text", s"$root/idx",
       "crash", 0.5)
-    val bandsGen = new java.io.File(s"$root/idx/bands/gen=crash")
-    bandsGen.exists() shouldBe true
-    org.apache.commons.io.FileUtils.deleteDirectory(bandsGen)
-    // orphan hashes must not change any query result
+    java.nio.file.Files.write(manifest, committed)
+    for (sub <- Seq("bands", "hashes"))
+      new java.io.File(s"$root/idx/$sub/gen=crash").exists() shouldBe true
+    // the orphan generation must not change any query result
     rows(s"$root/idx") shouldBe baseline
     // and the retry completes the append to the exact grown state
     graft.llm.Dedup.appendToMinhashIndex(b, "doc_id", "text", s"$root/idx",

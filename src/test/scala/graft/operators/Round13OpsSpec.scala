@@ -36,7 +36,7 @@ class Round13OpsSpec extends SparkSpec {
   }
 
   test("d20 compaction: one generation out, grown-index results preserved, " +
-      "meta copied verbatim, in-place refused, half-written dest refuses") {
+      "params copied verbatim, in-place refused, half-written dest refuses") {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("graft-d20").toString
@@ -47,14 +47,15 @@ class Round13OpsSpec extends SparkSpec {
     new java.io.File(s"$root/idx/bands").list()
       .count(_.startsWith("gen=")) shouldBe 2
     graft.llm.Dedup.compactMinhashIndex(spark, s"$root/idx", s"$root/c")
-    // exactly one generation in the compacted store, meta verbatim
+    // exactly one generation in the compacted store, params verbatim
     for (sub <- Seq("bands", "hashes"))
       new java.io.File(s"$root/c/$sub").list()
         .filter(_.startsWith("gen=")).toSeq shouldBe Seq("gen=base")
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/c/_graft_index.json")) shouldBe
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$root/idx/_graft_index.json"))
+    def manifest(p: String) = graft.util.IndexStore
+      .readManifest(spark, p, graft.llm.Dedup.minhashStore)
+    manifest(s"$root/idx").gens shouldBe Seq("base", "s1")
+    manifest(s"$root/c").gens shouldBe Seq("base")
+    manifest(s"$root/c").params shouldBe manifest(s"$root/idx").params
     val probe = docs.filter(col("doc_id") % 3 === 2)
     def rows(p: String) = graft.llm.Dedup
       .minhashPairsAgainstIndex(probe, "doc_id", "text", p, 0.5)
@@ -65,10 +66,12 @@ class Round13OpsSpec extends SparkSpec {
     // in-place compaction is refused (would lose crash safety)
     an[IllegalArgumentException] should be thrownBy
       graft.llm.Dedup.compactMinhashIndex(spark, s"$root/idx", s"$root/idx")
-    // the sidecar is the commit marker: a dest missing it refuses loudly
+    // the manifest is the commit marker: a dest missing it refuses loudly
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$root/c/_graft_index.json"))
-    a[java.io.IOException] should be thrownBy rows(s"$root/c")
+    the[IllegalArgumentException] thrownBy rows(s"$root/c") should have message
+      s"requirement failed: no index meta (_graft_index.json) at $root/c — " +
+        "store missing or half-written"
   }
 
   test("d21 tombstones: merge-on-read exclusion, idempotent takedown " +

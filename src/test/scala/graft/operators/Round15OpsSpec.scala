@@ -93,8 +93,10 @@ class Round15OpsSpec extends SparkSpec {
       s"$root/rb", 0.5)
     rows(s"$root/rb") shouldBe want
     // compaction path: the DEST dir already carries a tombstone list
-    // (ping-pong compaction onto a previously-used dir) — the compacted
-    // store must start with an empty takedown set
+    // (ping-pong compaction onto a previously-used store dir) — the
+    // compacted store must start with an empty takedown set
+    graft.llm.Dedup.writeMinhashIndex(corpus, "doc_id", "text",
+      s"$root/c", 0.5)
     graft.llm.Dedup.tombstoneMinhashIndex(spark, s"$root/c", dead,
       "doc_id", "tstale")
     graft.llm.Dedup.compactMinhashIndex(spark, s"$root/ref", s"$root/c")

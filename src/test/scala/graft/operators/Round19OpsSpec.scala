@@ -86,7 +86,7 @@ class Round19OpsSpec extends SparkSpec {
     Similarity.writeIvfIndex(idx, dir)
     val after = Similarity.readIvfIndex(spark, dir)
     after.inverted.count() shouldBe base.count()
-    assert(!graft.util.IndexSidecar.exists(spark, dir, "tombstones"))
+    assert(!graft.util.IndexStore.exists(spark, dir, "tombstones"))
   }
 
   test("ivf store: tombstone of unknown ids is harmless; compaction reclaims physically") {
@@ -101,7 +101,7 @@ class Round19OpsSpec extends SparkSpec {
     Similarity.compactIvfIndex(spark, dir, s"$dest/c")
     // physical reclamation: raw parquet rows, before any tombstone join
     spark.read.parquet(s"$dest/c/inverted").count() shouldBe n - 2
-    assert(!graft.util.IndexSidecar.exists(spark, s"$dest/c", "tombstones"))
+    assert(!graft.util.IndexStore.exists(spark, s"$dest/c", "tombstones"))
     // compacted store must answer identically to the grown store
     val probes = emb.filter(col("vec_id") < 3)
     val a = Similarity.ivfSearch(spark, Similarity.readIvfIndex(spark, dir),

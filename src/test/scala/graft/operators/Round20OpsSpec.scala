@@ -114,7 +114,7 @@ class Round20OpsSpec extends SparkSpec {
     Similarity.writeIvfIndex(idx, dir)
     // simulate the writeIvfIndex upfront delete having run and the
     // rebuild crashing before the final meta write
-    graft.util.IndexSidecar.deleteIfExists(spark, dir, "_graft_index.json")
+    graft.util.IndexStore.deleteIfExists(spark, dir, "_graft_index.json")
     val e = intercept[IllegalArgumentException] {
       Similarity.readIvfIndex(spark, dir)
     }
@@ -124,7 +124,7 @@ class Round20OpsSpec extends SparkSpec {
         emb.limit(1).select("vec_id"), "vec_id", "t1")
     }
     // ...and the refused tombstone wrote NOTHING (no orphan takedown list)
-    assert(!graft.util.IndexSidecar.exists(spark, dir, "tombstones"))
+    assert(!graft.util.IndexStore.exists(spark, dir, "tombstones"))
   }
 
   test("health: fixed-quantizer drift degrades both metrics; baseline persists") {
@@ -162,7 +162,7 @@ class Round20OpsSpec extends SparkSpec {
     re.inverted.count() shouldBe 190
     // the repaired store starts a fresh lifecycle: no takedown list, a
     // fresh baseline measured on the repaired layout
-    assert(!graft.util.IndexSidecar.exists(spark, dest, "tombstones"))
+    assert(!graft.util.IndexStore.exists(spark, dest, "tombstones"))
     assert(Similarity.readIvfMeta(spark, dest).health.isDefined)
   }
 

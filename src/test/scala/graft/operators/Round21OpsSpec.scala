@@ -122,7 +122,7 @@ class Round21OpsSpec extends SparkSpec {
     // a LIVE lock (fresh mtime) blocks until timeout — refused loudly
     assert(lock.createNewFile())
     val e = intercept[RuntimeException] {
-      graft.util.IndexSidecar.withLockFile(spark, dir, "_graft_index.lock",
+      graft.util.IndexStore.withLockFile(spark, dir, "_graft_index.lock",
         staleMs = 600000L, timeoutMs = 300L) { () }
     }
     e.getMessage should include("lock")
