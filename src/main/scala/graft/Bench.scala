@@ -4,12 +4,17 @@ package graft
   * prints one JSON line. Failed queries are reported explicitly (value -1
   * and an `errors` list) instead of silently contributing ~0s.
   *
+  * Each query runs twice back to back. `queries_cold` is run 1: the
+  * query's first execution in this JVM, so it pays codegen compilation
+  * and JIT warm-up of its own operators on top of the work itself.
+  * `queries` is the MIN of the two runs (run 2 has warm code paths).
+  * Both runs do the same work: no cache outlives a query run, so every
+  * run fits the indexes and writes the stores it reads.
+  *
   * Noise control: one JVM runs the whole suite, so late queries would
   * otherwise inherit heap/GC debt from earlier ones (r03 showed 3–8×
-  * suite-vs-standalone inflation on the heavy tail). Each query is
-  * therefore timed as the MIN of two back-to-back materializations (the
-  * standard best-achievable methodology — run 1 absorbs any inherited GC
-  * debt and codegen compilation), and a synchronous System.gc() runs
+  * suite-vs-standalone inflation on the heavy tail). The min of two runs
+  * absorbs inherited GC debt, and a synchronous System.gc() runs
   * off-the-clock between queries so debt isn't billed to whoever runs
   * next. Optional args: query names to bench a subset locally.
   */
@@ -80,22 +85,10 @@ object Bench {
         graft.util.Tables.dropGraftTempViews(spark)
         elapsed
       }
-      // MEMO-COLD run 1 (round-18 verdict ask 2a): drop every JVM-lifetime
-      // memo entry first, so run 1 pays every store write / index fit the
-      // declared query performs — exactly what a fresh JVM pays — and the
-      // per-run build count says whether this query did build work at all.
-      // `queries` keeps the historical min-of-2 semantics (run 2 may ride
-      // the memo run 1 warmed, as production's build-once/consume-many
-      // deployments do); `queries_cold` records the cold run alongside, so
-      // both shapes are on the record per query.
       var cold = -1.0
-      var builds = 0L
       val best =
         try {
-          graft.util.SessionMemo.invalidateAll(spark)
-          val b0 = graft.util.SessionMemo.buildCount.get()
           cold = once()
-          builds = graft.util.SessionMemo.buildCount.get() - b0
           math.min(cold, once())
         }
         catch {
@@ -105,15 +98,13 @@ object Bench {
             -1.0
         }
       System.gc() // collect this query's debt off the next query's clock
-      (name, best, cold, builds)
+      (name, best, cold)
     }
     val sentEnd = sentinel()
     val ioEnd = ioSentinel()
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qsCold = results.map { case (k, _, c, _) => "\"" + k + "\":" + c }.mkString("{", ",", "}")
-    val qsBuilds = results.collect { case (k, _, _, b) if b > 0 => "\"" + k + "\":" + b }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qsCold = results.map { case (k, _, c) => "\"" + k + "\":" + c }.mkString("{", ",", "}")
+    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val sentJson = f"""{"start":$sentStart%.3f,"mid":$sentMid%.3f,"end":$sentEnd%.3f,"io_start":$ioStart%.3f,"io_mid":$ioMid%.3f,"io_end":$ioEnd%.3f}"""
     // Pre-filtered noise judgment (round-10 advice #7): identical sentinel
@@ -124,7 +115,7 @@ object Bench {
     // was invisible to the CPU-only sentinel).
     val noiseSuspect = sentEnd > 1.5 * sentStart || ioEnd > 1.5 * ioStart
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_cold":$qsCold,"memo_builds":$qsBuilds,"errors":$errJson,"sentinel":$sentJson,"noise_suspect":$noiseSuspect,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_cold":$qsCold,"errors":$errJson,"sentinel":$sentJson,"noise_suspect":$noiseSuspect,"sf":"$sfDir"}"""
     println(json)
     // stdout capture may truncate (BENCH_r02 lost its tail to a 10 KB cap):
     // persist the full line where the driver/judge can always read it.

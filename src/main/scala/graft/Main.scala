@@ -3,8 +3,6 @@ package graft
 import graft.features.{FeatureEngineering, TargetTransformer}
 import graft.infer.Predictor
 import graft.ml.Trainer
-import org.apache.spark.ml.Transformer
-import org.apache.spark.ml.regression.{GBTRegressionModel, LinearRegressionModel, RandomForestRegressionModel}
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry points mirroring the reference's argparse mains
@@ -133,12 +131,7 @@ object Main {
       input: String, output: String): Unit = {
     val fe = new FeatureEngineering("strict").load(s"$modelDir/feature_engineering")
     val tt = new TargetTransformer("price").load(s"$modelDir/target_transform.json")
-    val model: Transformer = modelType match {
-      case "rf" => RandomForestRegressionModel.load(s"$modelDir/$modelType")
-      case "lr" => LinearRegressionModel.load(s"$modelDir/$modelType")
-      case "gbt" => GBTRegressionModel.load(s"$modelDir/$modelType")
-      case other => throw new IllegalArgumentException(s"unknown --model-type $other")
-    }
+    val model = graft.ml.Persist.loadModelOfType(modelDir, modelType)
     val preds = new Predictor(fe, model, tt)
       .predictBatch(spark.read.parquet(input))
       .select("id_annonce", "prediction_price")

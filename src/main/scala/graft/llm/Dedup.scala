@@ -357,73 +357,20 @@ object Dedup {
     labels.select(col("node").as("doc_id"), col("lbl").as("group_id"))
   }
 
-  /** Build-once-per-JVM memo over the gram-bucketed near-dup component
-    * chain ([[ngramJaccardPairs]] → [[connectedComponents]]). Three
-    * operators work off the IDENTICAL component map of the same corpus —
-    * group assignment (d07), keeper selection (d14), leakage-safe
-    * splitting (p11) — and in production that map is materialized once by
-    * a curation batch job and joined by every downstream consumer, not
-    * re-derived per query ([[graft.llm.Similarity.cachedIvfIndex]] is the
-    * same argument for the ANN index). The memoized frame is the final
+  /** The gram-bucketed near-dup component map ([[ngramJaccardPairs]] →
+    * [[connectedComponents]]): the group assignment d07 declares and the
+    * input of keeper selection (d14) and leakage-safe splitting (p11).
+    * Each caller runs the whole chain; the returned frame is the final
     * localCheckpoint of the label-propagation loop, so consumers re-scan
-    * materialized rows instead of re-running grams → pairs → CC.
-    *
-    * Billing is explicit, not hidden: d07 — the operator that DEFINES the
-    * map — always runs the full chain ([[buildNgramComponents]]), so a
-    * benchmark's min-of-N per-query timing charges the build to exactly
-    * one named query instead of letting a memo hit on the second
-    * repetition erase it from the suite total; d14/p11 take the
-    * [[cachedNgramComponents]] path and are billed their true marginal
-    * cost on top of an existing map. Deterministic either way: the chain
-    * has no RNG, so build and memo-hit callers see identical rows; keyed
-    * on LIVE session identity (weak-keyed, so stopped sessions evict —
-    * see [[graft.util.SessionMemo]]) + corpus key + a file-metadata
-    * fingerprint of the corpus path (so an in-JVM regen under the same
-    * path is a MISS, never a stale hit) + every semantic parameter, so a
-    * different threshold or table never aliases.
+    * materialized rows. The chain has no RNG, so every call yields the
+    * same rows.
     */
-  private val ngramComponentsMemo =
-    new graft.util.SessionMemo[(String, Int, Double, Int), DataFrame]
-
-  private def componentsKey(corpusKey: String,
-      idCol: String, textCol: String, n: Int, minJaccard: Double,
-      maxDocFreq: Int) =
-    (s"$corpusKey#${graft.util.SessionMemo.pathFingerprint(corpusKey)}" +
-      s"#$idCol#$textCol", n, minJaccard, maxDocFreq)
-
-  /** Run the full gram → pair → CC chain and (re)publish it in the memo. */
-  def buildNgramComponents(spark: SparkSession, docs: => DataFrame,
-      corpusKey: String, idCol: String, textCol: String, n: Int,
-      minJaccard: Double, maxDocFreq: Int): DataFrame = {
-    val built = connectedComponents(
+  def ngramComponents(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, minJaccard: Double, maxDocFreq: Int): DataFrame =
+    connectedComponents(
       ngramJaccardPairs(docs, idCol, textCol, n, minJaccard,
         maxDocFreq = Some(maxDocFreq)),
       "doc_a", "doc_b")
-    ngramComponentsMemo.put(spark,
-      componentsKey(corpusKey, idCol, textCol, n, minJaccard, maxDocFreq),
-      built)
-    built
-  }
-
-  /** Consumer path: reuse the published map, building only if no builder
-    * ran yet in this JVM.
-    */
-  def cachedNgramComponents(spark: SparkSession, docs: => DataFrame,
-      corpusKey: String, idCol: String, textCol: String, n: Int,
-      minJaccard: Double, maxDocFreq: Int): DataFrame =
-    ngramComponentsMemo.getOrElseUpdate(spark,
-      componentsKey(corpusKey, idCol, textCol, n, minJaccard, maxDocFreq))(
-      connectedComponents(
-        ngramJaccardPairs(docs, idCol, textCol, n, minJaccard,
-          maxDocFreq = Some(maxDocFreq)),
-        "doc_a", "doc_b"))
-
-  /** Invalidation hook for data mutated in ways the path fingerprint can't
-    * see (e.g. an object store that rewrites bytes but preserves listing
-    * metadata): drops every component map memoized for `spark`.
-    */
-  def invalidateNgramComponents(spark: SparkSession): Unit =
-    ngramComponentsMemo.invalidate(spark)
 
   /** MinHash near-dup, native banded-LSH form: per doc, `bands` bucket
     * keys, each the hash of `rowsPerBand` consecutive minhash values;

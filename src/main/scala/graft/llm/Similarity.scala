@@ -229,7 +229,14 @@ object Similarity {
     * fitted centroids (tiny: nClusters × dim floats — driver/literal-sized
     * by construction, like any ANN index's coarse quantizer).
     */
-  final case class IvfIndex(inverted: DataFrame, centroids: Array[Array[Float]])
+  final case class IvfIndex(inverted: DataFrame, centroids: Array[Array[Float]]) {
+    /** The same index with its inverted file persisted: a search plan
+      * reads the inverted file several times (members, cluster sizes,
+      * scan accounting), and the persist makes the assignment pass run
+      * once per action tree, not once per subtree. */
+    def persisted: IvfIndex =
+      copy(inverted = inverted.persist(StorageLevel.MEMORY_AND_DISK))
+  }
 
   /** Build the IVF coarse quantizer: spherical k-means (cluster L2-normalized
     * vectors so Euclidean assignment and cosine probe-ranking agree:
@@ -270,53 +277,6 @@ object Similarity {
       km.clusterCenters.map(_.toArray.map(_.toFloat)))
   }
 
-  /** Build-once-per-JVM memo over [[buildIvfIndex]]. The k-means FIT (the
-    * Lloyd iterations — the expensive part of an IVF build) runs on the
-    * first call per (session, corpus-key, params); every later caller
-    * reuses the fitted coarse quantizer. This is the in-process version of
-    * what production ANN serving does anyway: the index is built by one
-    * batch job and searched by many — s02 (search contract) and s06
-    * (persistence contract) exercise the same index rather than each
-    * paying an independent build of the identical seeded quantizer.
-    * Deterministic: the build is seeded, so memo-hit and memo-miss callers
-    * see byte-identical centroids; keyed on LIVE session identity
-    * (weak-keyed, stopped sessions evict — [[graft.util.SessionMemo]])
-    * plus a file-metadata fingerprint of the corpus path, so an in-JVM
-    * regen under the same path rebuilds instead of serving a stale index.
-    * `keySuffix` disambiguates indexes over different SUBSETS of the same
-    * path (the s14–s16 lifecycle queries fit their quantizer on the base
-    * shard only — same path, same nClusters, different corpus — which
-    * without the suffix would collide with s02's full-corpus key).
-    */
-  private val ivfMemo =
-    new graft.util.SessionMemo[(String, Int, Long, Long), IvfIndex]
-
-  def cachedIvfIndex(spark: SparkSession, corpus: => DataFrame,
-      corpusKey: String, idCol: String, embCol: String, nClusters: Int,
-      seed: Long = 42L, maxFitRows: Long = 100000L,
-      keySuffix: String = ""): IvfIndex =
-    ivfMemo.getOrElseUpdate(spark,
-      (s"$corpusKey#${graft.util.SessionMemo.pathFingerprint(corpusKey)}#$keySuffix",
-        nClusters, seed, maxFitRows)) {
-        val idx = buildIvfIndex(spark, corpus, idCol, embCol, nClusters, seed, maxFitRows)
-        // the inverted file is used several times per search plan (members,
-        // cluster sizes, scan accounting) — persist it so the assignment
-        // pass runs once per action tree, not once per subtree. A later
-        // clearCache() just demotes this to recompute-on-next-use.
-        idx.copy(inverted = idx.inverted.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-
-  /** Companion invalidation hook (mirrors
-    * [[graft.llm.Dedup.invalidateNgramComponents]]): drops every IVF index
-    * and store-written marker memoized for `spark`.
-    */
-  def invalidateIvfIndexes(spark: SparkSession): Unit = {
-    ivfMemo.invalidate(spark)
-    ivf2Memo.invalidate(spark)
-    ivfStoreMemo.invalidate(spark)
-  }
-
   // ----------------------------------- two-level IVF coarse quantizer ---
 
   /** TWO-LEVEL IVF index (the "hierarchical coarse quantizer" a flat IVF
@@ -336,7 +296,11 @@ object Similarity {
     * cell (k1 + np1·k2 work per probe, see [[probe2Cells]]).
     */
   final case class Ivf2Index(inverted: DataFrame,
-      centroids1: Array[Array[Float]], residuals2: Array[Array[Float]])
+      centroids1: Array[Array[Float]], residuals2: Array[Array[Float]]) {
+    /** The same index with its inverted file persisted ([[IvfIndex.persisted]]). */
+    def persisted: Ivf2Index =
+      copy(inverted = inverted.persist(StorageLevel.MEMORY_AND_DISK))
+  }
 
   def buildIvf2Index(spark: SparkSession, corpus: DataFrame,
       idCol: String, embCol: String, k1: Int, k2: Int,
@@ -380,25 +344,6 @@ object Similarity {
       .select("neighbor_id", "emb", "c1", "c2")
     Ivf2Index(inv, c1, m2.clusterCenters.map(_.toArray.map(_.toFloat)))
   }
-
-  /** Build-once-per-JVM memo over [[buildIvf2Index]] — same contract as
-    * [[cachedIvfIndex]] (seeded fits ⇒ byte-identical centroids on hit
-    * and miss; keyed on live session + corpus-path fingerprint).
-    */
-  private val ivf2Memo =
-    new graft.util.SessionMemo[(String, Int, Int, Long, Long), Ivf2Index]
-
-  def cachedIvf2Index(spark: SparkSession, corpus: => DataFrame,
-      corpusKey: String, idCol: String, embCol: String, k1: Int, k2: Int,
-      seed: Long = 42L, maxFitRows: Long = 100000L,
-      keySuffix: String = ""): Ivf2Index =
-    ivf2Memo.getOrElseUpdate(spark,
-      (s"$corpusKey#${graft.util.SessionMemo.pathFingerprint(corpusKey)}#$keySuffix",
-        k1, k2, seed, maxFitRows)) {
-      val idx = buildIvf2Index(spark, corpus, idCol, embCol, k1, k2,
-        seed, maxFitRows)
-      idx.copy(inverted = idx.inverted.persist(StorageLevel.MEMORY_AND_DISK))
-    }
 
   /** The `nprobe` nearest (c1, c2) cells per probe. Two bounded stages,
     * both per-row expression work over literal-sized quantizer tables:
@@ -496,20 +441,6 @@ object Similarity {
       .select(col("p_id"), col("neighbor_id"),
         cosine(spark, col("emb"), col("p_emb")).as("sim"))
     finishTopK(cand, k)
-  }
-
-  /** Write-once-per-JVM companion to [[cachedIvfIndex]]: the store at
-    * `path` is written on the first call per (session, path) and reused
-    * after — a persisted index is immutable once published (re-publishing
-    * identical bytes per search proves nothing and costs a write job).
-    */
-  private val ivfStoreMemo = new graft.util.SessionMemo[String, Boolean]
-
-  def ensureIvfStore(idx: IvfIndex, path: String): Unit = {
-    val spark = idx.inverted.sparkSession
-    ivfStoreMemo.getOrElseUpdate(spark, path) {
-      writeIvfIndex(idx, path); true
-    }: Unit
   }
 
   // ------------------------------------------------------ IVF store ---
@@ -634,8 +565,7 @@ object Similarity {
         .toDF("cid", "cv").coalesce(1)
         .write.mode("overwrite").parquet(dir("centroids"))
       // fit-time health baseline: measured on the just-written generation
-      // (one agg job per store PUBLISH — store writes are memoized, so
-      // this is paid once per index, not per search)
+      // (one agg job per store PUBLISH, never per search)
       IvfParams(idx.centroids.length,
         idx.centroids.headOption.map(_.length).getOrElse(0),
         Some(computeIvfHealth(spark, spark.read.parquet(dir("inverted")),
@@ -824,7 +754,7 @@ object Similarity {
   /** INCREMENTAL (generational) compaction of a [[writeIvfIndex]] store
     * ([[graft.util.IndexStore.compactGenerations]]) — the round-16
     * verdict's ask 2: [[compactIvfIndex]] rewrites the FULL payload
-    * (measured 184 s unmemoized at 200 k vectors) even when one small
+    * (measured 184 s at 200 k vectors) even when one small
     * generation holds all the tombstoned rows. This rewrites ONLY
     * generations whose dead fraction exceeds `deadFracThreshold`, under
     * epoch-suffixed names swapped in by one manifest commit; cold
@@ -1308,7 +1238,7 @@ object Similarity {
   def nnDescentGraph(spark: SparkSession, corpus: DataFrame,
       idCol: String, embCol: String, k: Int, kBuild: Int = 10,
       rounds: Int = 2, nClusters: Int = -1, seedNprobe: Int = 8,
-      corpusKey: Option[String] = None, seedMode: String = "ivf",
+      seedMode: String = "ivf",
       maxFlatCells: Int = 2048, trackEvals: Boolean = true): NnDescentResult = {
     require(kBuild >= k, s"kBuild=$kBuild must be >= k=$k")
     require(seedMode == "ivf" || seedMode == "random",
@@ -1347,11 +1277,9 @@ object Similarity {
     // action. ScaleProbe's nnd ledger keeps the default and still measures.
     var (cur, seedEvals) = seedMode match {
       case "ivf" if cellsWanted <= maxFlatCells =>
-        val idx = corpusKey match {
-          case Some(key) =>
-            cachedIvfIndex(spark, corpus, key, idCol, embCol, cellsWanted)
-          case None => buildIvfIndex(spark, corpus, idCol, embCol, cellsWanted)
-        }
+        // the persisted inverted file lives until the seed is checkpointed
+        val idx = buildIvfIndex(spark, corpus, idCol, embCol, cellsWanted)
+          .persisted
         // seed mass = members of each probe's nprobe cells (what
         // ivfSearch scans), counted from the same cluster assignment
         val np = math.min(seedNprobe, idx.centroids.length)
@@ -1360,11 +1288,13 @@ object Similarity {
           .join(idx.inverted.groupBy("cluster")
             .agg(count(lit(1)).as("m")), "cluster")
           .agg(sum("m")).head().getLong(0)
-        (ivfSearch(spark, idx, corpus, idCol, embCol, kBuild, np,
+        val seed = ivfSearch(spark, idx, corpus, idCol, embCol, kBuild, np,
             minScanPartitions = spark.sparkContext.defaultParallelism)
           .select(col("p_id").as("id"), col("neighbor_id").as("nbr"),
             col("sim"))
-          .localCheckpoint(), evals)
+          .localCheckpoint()
+        idx.inverted.unpersist(blocking = false)
+        (seed, evals)
       case "ivf" =>
         // past the flat cap: TWO-LEVEL quantizer, same occupancy target
         // (cellsWanted composite cells at k2 = 32 residual codewords)
@@ -1375,11 +1305,8 @@ object Similarity {
         val k2 = 32
         val k1 = math.min(maxFlatCells.toLong,
           math.max(2L, (cellsWanted.toLong + k2 - 1) / k2)).toInt
-        val idx = corpusKey match {
-          case Some(key) =>
-            cachedIvf2Index(spark, corpus, key, idCol, embCol, k1, k2)
-          case None => buildIvf2Index(spark, corpus, idCol, embCol, k1, k2)
-        }
+        val idx = buildIvf2Index(spark, corpus, idCol, embCol, k1, k2)
+          .persisted
         val np1 = math.max(4, math.min(seedNprobe, idx.centroids1.length))
         // ONE materialized cell table feeds both the scan accounting and
         // the seed search (probe2Cells scaladoc: the barrier is
@@ -1396,6 +1323,7 @@ object Similarity {
             col("sim"))
           .localCheckpoint()
         cells.unpersist(blocking = false)
+        idx.inverted.unpersist(blocking = false)
         (seed, evals)
       case "random" =>
         // classic NN-Descent init: kBuild deterministic pseudo-random

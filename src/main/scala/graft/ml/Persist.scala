@@ -1,7 +1,8 @@
 package graft.ml
 
 import graft.features.{FeatureEngineering, TargetTransformer}
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.{PipelineModel, Transformer}
+import org.apache.spark.ml.regression.{GBTRegressionModel, LinearRegressionModel, RandomForestRegressionModel}
 import org.apache.spark.ml.util.{MLReadable, MLWritable}
 import java.nio.file.{Files, Paths}
 
@@ -50,6 +51,19 @@ object Persist {
 
   def loadModel[M](dir: String, reader: MLReadable[M]): M =
     reader.load(s"$dir/model")
+
+  /** The CLI's `--model-type` model (`rf`, `lr` or `gbt`), saved at
+    * `<modelDir>/<modelType>`; any other type is an
+    * IllegalArgumentException, checked before anything is read. */
+  def loadModelOfType(modelDir: String, modelType: String): Transformer = {
+    val reader: MLReadable[_ <: Transformer] = modelType match {
+      case "rf" => RandomForestRegressionModel
+      case "lr" => LinearRegressionModel
+      case "gbt" => GBTRegressionModel
+      case other => throw new IllegalArgumentException(s"unknown --model-type $other")
+    }
+    reader.load(s"$modelDir/$modelType")
+  }
 
   def loadPipeline(dir: String): PipelineModel =
     PipelineModel.load(s"$dir/feature_pipeline")

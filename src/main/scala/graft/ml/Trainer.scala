@@ -67,8 +67,9 @@ object Trainer {
       .setNumFolds(folds)
       .setSeed(seed)
       // grid×folds fits are independent; on tiny per-fit data the cost is
-      // job latency, so run 8 concurrently (local[32] has the slots and
-      // fold assignment is seed-determined, not thread-determined)
+      // job latency, so submit 8 concurrently (their tasks share the
+      // session's cores, and fold assignment is seed-determined, not
+      // thread-determined)
       .setParallelism(8)
       .fit(df)
 

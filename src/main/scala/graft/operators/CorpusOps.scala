@@ -890,7 +890,7 @@ object CorpusOps {
            |GROUP BY split, x.straddling_components ORDER BY split""".stripMargin),
     (s, d) => {
       import graft.llm.Dedup
-      val comp = Dedup.cachedNgramComponents(s, documents(s, d), d,
+      val comp = Dedup.ngramComponents(documents(s, d),
         "doc_id", "text", 3, 0.5, maxDocFreq = 10) // (doc_id, group_id) for docs in ≥1 pair
       val sp = documents(s, d).select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")

@@ -36,28 +36,6 @@ object LlmOps {
     */
   private[operators] val ProbeIdOffset = 1L << 40
 
-  /** Write-once-per-JVM memo over the d-family persisted stores (the
-    * round-17 verdict's ask 6 — [[graft.llm.Similarity.ensureIvfStore]]'s
-    * argument applied to the minhash/exact/bloom index choreographies):
-    * a published store is immutable and fully determined by the data
-    * dir, so d13/d17–d22 and the p18 keep-set re-building their stores
-    * on a bench's second iteration proves nothing and pays the
-    * shingle + signature + write bill again — which is exactly why the
-    * d-index family was the contention-sensitive tail in every flagged
-    * chain (per-run write IO amplifies host noise 2–3×). Keyed on the
-    * primary store path + a data-dir fingerprint so an in-JVM regen
-    * rebuilds; the MATCH side still reads the store from disk per run —
-    * that is the production shape being measured.
-    */
-  private val dedupStoreMemo = new graft.util.SessionMemo[String, Boolean]
-
-  private def ensureDedupStore(s: SparkSession, d: String, path: String)
-      (build: => Unit): Unit =
-    dedupStoreMemo.getOrElseUpdate(s,
-      s"$path#${graft.util.SessionMemo.pathFingerprint(d)}") {
-      build; true
-    }: Unit
-
   /** d01 — exact dedup stats. */
   val d01 = QSpec(
     "d01_exact_dedup",
@@ -243,11 +221,8 @@ object LlmOps {
     * components, not pairs. Oracle: the same pair graph closed transitively
     * with a recursive CTE, min reachable id per node.
     *
-    * d07 is the BUILDER of the per-JVM component-map memo
-    * ([[graft.llm.Dedup.buildNgramComponents]]): it always runs the full
-    * chain (so its benchmark time IS the build cost), and d14/p11 consume
-    * the materialized map at their true marginal cost — the
-    * batch-job-then-join shape a production curation pipeline has anyway.
+    * d14 and p11 run the same chain ([[graft.llm.Dedup.ngramComponents]])
+    * as their first stage.
     */
   val d07 = QSpec(
     "d07_neardup_components",
@@ -273,7 +248,7 @@ object LlmOps {
            |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
            |SELECT a AS doc_id, MIN(b) AS group_id FROM reach GROUP BY a
            |ORDER BY doc_id""".stripMargin),
-    (s, d) => Dedup.buildNgramComponents(s, documents(s, d), d,
+    (s, d) => Dedup.ngramComponents(documents(s, d),
       "doc_id", "text", 3, 0.5, maxDocFreq = 10)
       .orderBy("doc_id"))
 
@@ -393,10 +368,8 @@ object LlmOps {
     (s, d) => {
       val docs = documents(s, d)
       val idx = graft.util.Tables.scratch(d, "d13_index")
-      ensureDedupStore(s, d, idx) {
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", idx, 0.5)
-      }
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", idx, 0.5)
       Dedup.minhashPairsAgainstIndex(docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", idx, 0.5)
         .orderBy("new_id", "corpus_id")
@@ -432,12 +405,10 @@ object LlmOps {
     (s, d) => {
       val docs = documents(s, d)
       val idx = graft.util.Tables.scratch(d, "d19_index")
-      ensureDedupStore(s, d, idx) {
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", idx, 0.5)
-        Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", idx, "shard1", 0.5)
-      }
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
+        "doc_id", "text", idx, 0.5)
+      Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
+        "doc_id", "text", idx, "shard1", 0.5)
       Dedup.minhashPairsAgainstIndex(docs.filter(col("doc_id") % 3 === 2),
         "doc_id", "text", idx, 0.5)
         .orderBy("new_id", "corpus_id")
@@ -459,13 +430,11 @@ object LlmOps {
       val docs = documents(s, d)
       val idx = graft.util.Tables.scratch(d, "d20_index")
       val compacted = graft.util.Tables.scratch(d, "d20_compacted")
-      ensureDedupStore(s, d, idx) {
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", idx, 0.5)
-        Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", idx, "shard1", 0.5)
-        Dedup.compactMinhashIndex(s, idx, compacted)
-      }
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
+        "doc_id", "text", idx, 0.5)
+      Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
+        "doc_id", "text", idx, "shard1", 0.5)
+      Dedup.compactMinhashIndex(s, idx, compacted)
       Dedup.minhashPairsAgainstIndex(docs.filter(col("doc_id") % 3 === 2),
         "doc_id", "text", compacted, 0.5)
         .orderBy("new_id", "corpus_id")
@@ -500,15 +469,13 @@ object LlmOps {
     (s, d) => {
       val docs = documents(s, d)
       val idx = graft.util.Tables.scratch(d, "d21_index")
-      ensureDedupStore(s, d, idx) {
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", idx, 0.5)
-        Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", idx, "shard1", 0.5)
-        Dedup.tombstoneMinhashIndex(s, idx,
-          docs.filter(col("doc_id") % 3 < 2 && col("doc_id") % 4 === 1),
-          "doc_id", "takedown1")
-      }
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
+        "doc_id", "text", idx, 0.5)
+      Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
+        "doc_id", "text", idx, "shard1", 0.5)
+      Dedup.tombstoneMinhashIndex(s, idx,
+        docs.filter(col("doc_id") % 3 < 2 && col("doc_id") % 4 === 1),
+        "doc_id", "takedown1")
       Dedup.minhashPairsAgainstIndex(docs.filter(col("doc_id") % 3 === 2),
         "doc_id", "text", idx, 0.5)
         .orderBy("new_id", "corpus_id")
@@ -548,16 +515,14 @@ object LlmOps {
       val docs = documents(s, d)
       val train = graft.util.Tables.scratch(d, "d22_train_index")
       val eval = graft.util.Tables.scratch(d, "d22_eval_index")
-      ensureDedupStore(s, d, train) {
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", train, 0.5)
-        // the train index GROWS like production: shard 1 appended, so the
-        // check runs against a multi-generation store on the A side
-        Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", train, "shard1", 0.5)
-        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 2),
-          "doc_id", "text", eval, 0.5)
-      }
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
+        "doc_id", "text", train, 0.5)
+      // the train index GROWS like production: shard 1 appended, so the
+      // check runs against a multi-generation store on the A side
+      Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
+        "doc_id", "text", train, "shard1", 0.5)
+      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 2),
+        "doc_id", "text", eval, 0.5)
       Dedup.minhashPairsIndexVsIndex(s, train, eval, 0.5)
         .select(col("a_id").as("train_id"), col("b_id").as("eval_id"),
           col("jaccard"))
@@ -611,7 +576,7 @@ object LlmOps {
            |  CAST(n_docs AS BIGINT) AS n_docs
            |FROM ranked WHERE rn = 1 ORDER BY group_id""".stripMargin),
     (s, d) => {
-      val groups = Dedup.cachedNgramComponents(s, documents(s, d), d,
+      val groups = Dedup.ngramComponents(documents(s, d),
         "doc_id", "text", 3, 0.5, maxDocFreq = 10)
       Dedup.keeperByQuality(groups,
         scoredDocs(s, d).select("doc_id", "quality_score"),
@@ -697,9 +662,8 @@ object LlmOps {
     (s, d) => {
       val emb = embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 5)
-      // build-once: s06 searches this same fitted index (judge r9 #2) —
-      // one seeded k-means fit per JVM, not one per declared query
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding", 512)
+      val idx = Similarity.buildIvfIndex(s, emb, "vec_id", "embedding", 512)
+        .persisted
       val np = math.max(1, idx.centroids.length * 2 / 5) // probe 40 % of cells
       val ann = Similarity.ivfSearch(s, idx, probes, "vec_id", "embedding", 10, np)
         .select("p_id", "neighbor_id")
@@ -731,13 +695,13 @@ object LlmOps {
     (s, d) => {
       val emb = embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 5)
-      // the same shared fitted quantizer s02 searches (cachedIvfIndex);
       // this query's contract is the PERSISTENCE round-trip, which is
       // index-build-agnostic: stored search must equal in-memory search
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding", 512)
+      val idx = Similarity.buildIvfIndex(s, emb, "vec_id", "embedding", 512)
+        .persisted
       val np = math.max(1, idx.centroids.length * 2 / 5)
       val path = graft.util.Tables.scratch(d, "s06_ivf")
-      Similarity.ensureIvfStore(idx, path)
+      Similarity.writeIvfIndex(idx, path)
       val stored = Similarity.readIvfIndex(s, path)
       val mem = Similarity.ivfSearch(s, idx, probes, "vec_id", "embedding", 10, np)
         .select(col("p_id"), col("rank"),
@@ -1568,9 +1532,7 @@ object LlmOps {
     (s, d) => {
       val docs = documents(s, d)
       val path = graft.util.Tables.scratch(d, "d17_index")
-      ensureDedupStore(s, d, path) {
-        Dedup.writeExactIndex(docs, "doc_id", "text", path)
-      }
+      Dedup.writeExactIndex(docs, "doc_id", "text", path)
       val batch = docs.select((col("doc_id") + ProbeIdOffset).as("doc_id"),
         when(col("doc_id") % 2 === 0, col("text"))
           .otherwise(concat(col("text"), lit(" novel"))).as("text"))
@@ -1599,10 +1561,8 @@ object LlmOps {
     (s, d) => {
       val docs = documents(s, d)
       val path = graft.util.Tables.scratch(d, "d18_index")
-      ensureDedupStore(s, d, path) {
-        Dedup.writeExactIndex(docs, "doc_id", "text", path)
-        Dedup.writeExactIndexBloom(s, path)
-      }
+      Dedup.writeExactIndex(docs, "doc_id", "text", path)
+      Dedup.writeExactIndexBloom(s, path)
       val batch = docs.select((col("doc_id") + ProbeIdOffset).as("doc_id"),
         when(col("doc_id") % 2 === 0, col("text"))
           .otherwise(concat(col("text"), lit(" novel"))).as("text"))
@@ -2027,9 +1987,8 @@ object LlmOps {
     * coarse cells bound WHICH vectors are scanned, 8-bit codes bound the
     * scan PAYLOAD, and the exact cosine kernel touches only the
     * shortlist — the three-layer index production vector stores run at
-    * corpus scale). Searches the SAME shared fitted quantizer as s02/s06
-    * (cachedIvfIndex — one seeded k-means fit per JVM) with s09's
-    * closed-form SQ8 codebook inside the probed cells.
+    * corpus scale). Searches the same seeded 512-cell quantizer as
+    * s02/s06 with s09's closed-form SQ8 codebook inside the probed cells.
     *
     * The declared output is the s02-style bounded-boolean contract with
     * every term a FRACTION of data-derived quantities (the s02 regen
@@ -2046,7 +2005,8 @@ object LlmOps {
       val emb = embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 16)
       val k = 10
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding", 512)
+      val idx = Similarity.buildIvfIndex(s, emb, "vec_id", "embedding", 512)
+        .persisted
       val np = math.max(1, idx.centroids.length * 2 / 5) // probe 40 % of cells
       val cb = Similarity.fitSq8(s, emb, "embedding")
       val ann = Similarity.ivfSq8Search(s, idx, cb, probes, "vec_id",
@@ -2375,7 +2335,7 @@ object LlmOps {
       val res = Similarity.nnDescentGraph(s, emb, "vec_id", "embedding",
         k, kBuild = kb, rounds = rounds,
         nClusters = math.max(128L, n / 32L).toInt,
-        seedNprobe = 16, corpusKey = Some(d), trackEvals = false)
+        seedNprobe = 16, trackEvals = false)
       val ann = res.edges.select("p_id", "neighbor_id").cache()
       val perNode = ann.groupBy("p_id").agg(count(lit(1)).as("deg"))
       val stats = perNode.agg(count(lit(1)).as("nodes"), max("deg").as("maxdeg"))
@@ -2408,9 +2368,9 @@ object LlmOps {
 
   /** s11 — metadata-FILTERED ANN (the production complication every
     * vector store hits: "top-k neighbors among vectors WHERE label < 5").
-    * The predicate is pushed INTO the index scan — the shared fitted IVF
-    * index's inverted file (the same [[Similarity.cachedIvfIndex]]
-    * quantizer s02/s06/s10 search) is semi-join-filtered by the eligible
+    * The predicate is pushed INTO the index scan — the IVF index's
+    * inverted file (the same seeded 512-cell quantizer s02/s06/s10
+    * search) is semi-join-filtered by the eligible
     * ids BEFORE the candidate join (pre-filtering; a 100 TB deployment
     * carries the filter columns IN the inverted lists so the prune is a
     * pushed parquet predicate) — never applied to the finished top-k
@@ -2429,9 +2389,10 @@ object LlmOps {
       val emb = embeddings(s, d)
       val eligible = emb.filter(col("label") < 5)
       val probes = emb.filter(col("vec_id") < 5)
-      // the same shared fitted quantizer s02/s06/s10 search — filtered
-      // ANN reuses the UNFILTERED index and prunes its lists per query
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding", 512)
+      // filtered ANN searches the UNFILTERED index and prunes its lists
+      // per query
+      val idx = Similarity.buildIvfIndex(s, emb, "vec_id", "embedding", 512)
+        .persisted
       val np = math.max(1, idx.centroids.length * 2 / 5) // probe 40 % of cells
       val fidx = idx.copy(inverted = idx.inverted.join(
         eligible.select(col("vec_id").as("neighbor_id")),
@@ -2470,12 +2431,11 @@ object LlmOps {
     * k1 = 196 × k2 = 32) the same search reads recall 0.96 at 9.5 %
     * scan and 1.00 at 19 % (SCALE.md "s13 size-routed ANN — probe
     * ledger"). So the route is the operator: below the cap
-    * s13 searches the SAME fitted 512-cell quantizer s02/s06/s10/s11
-    * share (cachedIvfIndex — recall 0.96–1.0 at ≤ 40 % scan, measured
-    * across the curve), past it the two-level index at nprobe = 20 %
-    * of composite cells (the measured 1.00-recall dial), which at
-    * gsf5/gsf10 is the SAME fitted index s12's seed shares
-    * (cachedIvf2Index — one fit per JVM, s12 warms it). Both legs
+    * s13 searches the same seeded 512-cell quantizer s02/s06/s10/s11
+    * fit (recall 0.96–1.0 at ≤ 40 % scan, measured across the curve),
+    * past it the two-level index at nprobe = 20 % of composite cells
+    * (the measured 1.00-recall dial), which at gsf5/gsf10 is the same
+    * seeded two-level fit s12's seed uses. Both legs
     * compute the identical in-plan contract: recall@10 ≥ 0.9 against
     * exact brute force while scanning ≤ 50 % of the corpus. The ivf2
     * cell table is localCheckpoint'ed BEFORE the inverted-file join
@@ -2485,81 +2445,80 @@ object LlmOps {
     */
   /** The s13 SIZE ROUTE as a reusable piece (round-16: mm13 routes the
     * media vectors and st24's streaming twin routes its probes through
-    * the SAME decision and the SAME fitted per-JVM indexes): flat IVF at
-    * the shared 512-cell quantizer and its measured 40 %-of-cells dial
-    * below the k-means tractability cap (occupancy-constant cells,
-    * n ≲ 65 k), the two-level IVFADC quantizer at its measured
-    * 20 %-of-composite-cells dial past it. `emb`/`probes` carry
-    * (vec_id, embedding); `keySuffix` namespaces the per-JVM index memo
-    * per corpus family (""= the text embeddings s02/s06/s10/s11/s12
-    * share; "media" = mm13's landmark vectors). Returns the ANN top-k
-    * and the probed-cell scan accounting (the scanned term counts
-    * exactly what the search scanned — both ride the same cell table).
+    * the SAME decision): flat IVF at the 512-cell quantizer and its
+    * measured 40 %-of-cells dial below the k-means tractability cap
+    * (occupancy-constant cells, n ≲ 65 k), the two-level IVFADC
+    * quantizer at its measured 20 %-of-composite-cells dial past it
+    * ([[routedIndex]] fits it). `emb`/`probes` carry
+    * (vec_id, embedding). Returns the ANN top-k and the probed-cell
+    * scan accounting (the scanned term counts exactly what the search
+    * scanned — both ride the same cell table).
     */
   private[operators] def routedAnnWithScan(s: SparkSession, emb: DataFrame,
-      d: String, keySuffix: String, probes: DataFrame, k: Int)
-      : (DataFrame, DataFrame) = {
+      probes: DataFrame, k: Int): (DataFrame, DataFrame) =
+    routedIndex(s, emb) match {
+      case Left(idx) =>
+        val np = math.max(1, idx.centroids.length * 2 / 5)
+        (Similarity.ivfSearch(s, idx, probes, "vec_id", "embedding", k, np)
+           .select("p_id", "neighbor_id"),
+         ivfProbeScanCount(s, idx, probes, np))
+      case Right(idx) =>
+        val (np1, np) = ivf2Dial(idx)
+        val cells = Similarity.probe2Cells(s, idx, probes, "vec_id", "embedding",
+          np1, np).localCheckpoint() // eager: barrier + tiny (n_probes·np rows)
+        (Similarity.ivf2SearchFromCells(s, idx, cells, k)
+           .select("p_id", "neighbor_id"),
+         cells.join(idx.inverted.groupBy("c1", "c2").agg(count(lit(1)).as("m")),
+             Seq("c1", "c2"))
+           .agg(coalesce(sum(col("m")), lit(0L)).as("scanned")))
+    }
+
+  /** The s13 size route's fitted index over `emb` (vec_id, embedding),
+    * inverted file persisted: the flat 512-cell quantizer (Left) below
+    * the k-means tractability cap, the two-level quantizer (Right) past
+    * it, at occupancy-constant composite cells. A caller that searches
+    * the same corpus twice fits it once and passes it to both searches.
+    */
+  private[operators] def routedIndex(s: SparkSession, emb: DataFrame)
+      : Either[Similarity.IvfIndex, Similarity.Ivf2Index] = {
     val n = emb.count()
     val flatCap = 2048L
     val cellsWanted = math.max(128L, n / 32L)
-    if (cellsWanted <= flatCap) {
-      // flat route: the shared fitted s02 quantizer at its measured
-      // 40 %-of-cells dial
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding",
-        512, keySuffix = keySuffix)
-      val np = math.max(1, idx.centroids.length * 2 / 5)
-      (Similarity.ivfSearch(s, idx, probes, "vec_id", "embedding", k, np)
-         .select("p_id", "neighbor_id"),
-       ivfProbeScanCount(s, idx, probes, np))
-    } else {
-      // two-level route: occupancy-constant composite cells, the
-      // measured 20 %-of-cells dial
+    if (cellsWanted <= flatCap)
+      Left(Similarity.buildIvfIndex(s, emb, "vec_id", "embedding", 512).persisted)
+    else {
       val k2 = 32
       val k1 = math.max(2L, math.min(flatCap, (cellsWanted + k2 - 1) / k2)).toInt
-      val idx = Similarity.cachedIvf2Index(s, emb, d, "vec_id", "embedding",
-        k1, k2, keySuffix = keySuffix)
-      val nCells = idx.centroids1.length.toLong * idx.residuals2.length
-      val np1 = math.max(4, (idx.centroids1.length + 1) / 2)
-      val np = math.max(1L, nCells / 5).toInt
-      val cells = Similarity.probe2Cells(s, idx, probes, "vec_id", "embedding",
-        np1, np).localCheckpoint() // eager: barrier + tiny (n_probes·np rows)
-      (Similarity.ivf2SearchFromCells(s, idx, cells, k)
-         .select("p_id", "neighbor_id"),
-       cells.join(idx.inverted.groupBy("c1", "c2").agg(count(lit(1)).as("m")),
-           Seq("c1", "c2"))
-         .agg(coalesce(sum(col("m")), lit(0L)).as("scanned")))
+      Right(Similarity.buildIvf2Index(s, emb, "vec_id", "embedding", k1, k2)
+        .persisted)
     }
   }
 
+  /** The two-level route's measured dial: level-1 probes over half the
+    * cells (at least 4), and 20 % of the composite cells. */
+  private def ivf2Dial(idx: Similarity.Ivf2Index): (Int, Int) = {
+    val nCells = idx.centroids1.length.toLong * idx.residuals2.length
+    (math.max(4, (idx.centroids1.length + 1) / 2), math.max(1L, nCells / 5).toInt)
+  }
+
   /** [[routedAnnWithScan]]'s TOP-1 sibling for duplicate retrieval —
-    * the same size route and the same fitted per-JVM indexes, but the
-    * one-max-aggregate search shape ([[Similarity.ivfTop1EachRow]] /
+    * the same dials over a [[routedIndex]], but the one-max-aggregate
+    * search shape ([[Similarity.ivfTop1EachRow]] /
     * [[Similarity.ivf2Top1EachRow]]) that a STREAMING probe side can
     * run: st24 drives this with an unbounded probe frame, and its batch
     * twin drives it with the identical batch frame — same function,
     * same index, so the declared stream≡batch equality isolates exactly
     * the micro-batch execution difference.
     */
-  private[operators] def routedTop1(s: SparkSession, emb: DataFrame,
-      d: String, keySuffix: String, probes: DataFrame): DataFrame = {
-    val n = emb.count()
-    val flatCap = 2048L
-    val cellsWanted = math.max(128L, n / 32L)
-    if (cellsWanted <= flatCap) {
-      val idx = Similarity.cachedIvfIndex(s, emb, d, "vec_id", "embedding",
-        512, keySuffix = keySuffix)
-      val np = math.max(1, idx.centroids.length * 2 / 5)
-      Similarity.ivfTop1EachRow(s, idx, probes, "vec_id", "embedding", np)
-    } else {
-      val k2 = 32
-      val k1 = math.max(2L, math.min(flatCap, (cellsWanted + k2 - 1) / k2)).toInt
-      val idx = Similarity.cachedIvf2Index(s, emb, d, "vec_id", "embedding",
-        k1, k2, keySuffix = keySuffix)
-      val nCells = idx.centroids1.length.toLong * idx.residuals2.length
-      val np1 = math.max(4, (idx.centroids1.length + 1) / 2)
-      val np = math.max(1L, nCells / 5).toInt
-      Similarity.ivf2Top1EachRow(s, idx, probes, "vec_id", "embedding", np1, np)
-    }
+  private[operators] def routedTop1(s: SparkSession,
+      idx: Either[Similarity.IvfIndex, Similarity.Ivf2Index],
+      probes: DataFrame): DataFrame = idx match {
+    case Left(flat) =>
+      val np = math.max(1, flat.centroids.length * 2 / 5)
+      Similarity.ivfTop1EachRow(s, flat, probes, "vec_id", "embedding", np)
+    case Right(two) =>
+      val (np1, np) = ivf2Dial(two)
+      Similarity.ivf2Top1EachRow(s, two, probes, "vec_id", "embedding", np1, np)
   }
 
   val s13 = QSpec(
@@ -2571,7 +2530,7 @@ object LlmOps {
       val probes = emb.filter(col("vec_id") < 5)
       val exact = Similarity.bruteTopK(s, emb, probes, "vec_id", "embedding", 10)
         .select("p_id", "neighbor_id")
-      val (ann, scanned) = routedAnnWithScan(s, emb, d, "", probes, 10)
+      val (ann, scanned) = routedAnnWithScan(s, emb, probes, 10)
       annRecallCounts(exact, ann, emb).crossJoin(scanned)
         .select(
           col("n_probes"),
@@ -2590,9 +2549,8 @@ object LlmOps {
     * the scale curve (gsf2's 100 k docs onward — documents outnumber
     * text embeddings 2.5×, so the media family crosses the flat cap
     * EARLIER than s13 itself, which is precisely why the route belongs
-    * on this corpus). The media index is its own per-JVM fitted memo
-    * (`keySuffix = "media"` — landmark vectors and text embeddings are
-    * different corpora under the same data dir). Contract terms are
+    * on this corpus). The media index is fit on the landmark vectors
+    * themselves, not the text embeddings. Contract terms are
     * s13's verbatim: recall@10 ≥ 0.9 vs the exact brute-force baseline
     * over the decoded vectors, scan ≤ 50 % of the corpus, all in-plan.
     */
@@ -2608,7 +2566,7 @@ object LlmOps {
       val probes = vecs.filter(col("vec_id") < 5)
       val exact = Similarity.bruteTopK(s, vecs, probes, "vec_id", "embedding", 10)
         .select("p_id", "neighbor_id")
-      val (ann, scanned) = routedAnnWithScan(s, vecs, d, "media", probes, 10)
+      val (ann, scanned) = routedAnnWithScan(s, vecs, probes, 10)
       val out = annRecallCounts(exact, ann, vecs).crossJoin(scanned)
         .select(
           col("n_probes"),
@@ -2684,18 +2642,14 @@ object LlmOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val baseV = vecs.filter(col("vec_id") % 2 === 0)
       val appendV = vecs.filter(col("vec_id") % 2 === 1)
-      val fit = Similarity.cachedIvfIndex(s, baseV, d, "vec_id", "embedding",
-        512, keySuffix = "media-lifecycle-base")
+      val fit = Similarity.buildIvfIndex(s, baseV, "vec_id", "embedding", 512)
+        .persisted
       val path = graft.util.Tables.scratch(d, "mm14_ivf")
-      ivfLifecycleMemo.getOrElseUpdate(s,
-        s"$path#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.writeIvfIndex(Similarity.IvfIndex(
-          Similarity.assignToCentroids(s, baseV, "vec_id", "embedding",
-            fit.centroids), fit.centroids), path)
-        Similarity.appendToIvfIndex(appendV, "vec_id", "embedding", path,
-          "shard1")
-        true
-      }: Unit
+      Similarity.writeIvfIndex(Similarity.IvfIndex(
+        Similarity.assignToCentroids(s, baseV, "vec_id", "embedding",
+          fit.centroids), fit.centroids), path)
+      Similarity.appendToIvfIndex(appendV, "vec_id", "embedding", path,
+        "shard1")
       val arrivals = documents(s, d)
         .filter(col("doc_id") % 10 === 0 && col("doc_id") < 2000)
         .select(col("doc_id").cast("long")).as[Long].map { id =>
@@ -2738,8 +2692,7 @@ object LlmOps {
   /** Shared scaffolding for the s14–s16 lifecycle queries: the corpus
     * splits into a base shard (vec_id ≢ 2 mod 3) and an append shard
     * (≡ 2); the coarse quantizer is fitted ONCE on the base shard
-    * (memoized per JVM under its own key — `keySuffix` keeps it from
-    * colliding with s02's full-corpus index) and NEVER refit — the
+    * and NEVER refit — the
     * lifecycle contract is "new data joins existing cells", so every
     * reference index below shares these exact centroids. Returns the
     * probe set, the base index, the fixed-quantizer UNION inverted file
@@ -2748,17 +2701,6 @@ object LlmOps {
     * at a fixed quantizer a vector's cell depends on nothing but the
     * vector), and the store path with build + append already committed.
     */
-  /** Write-once-per-JVM memo over the s14–s16 store choreographies —
-    * [[Similarity.ensureIvfStore]]'s argument applied to the lifecycle:
-    * a published store (and its appended/tombstoned/compacted state) is
-    * immutable and fully determined by the data dir, so re-running the
-    * identical choreography on a bench's second iteration proves
-    * nothing and costs three write jobs of vector payloads (measured
-    * 184 s for s16's double store write at gsf10). Keyed on the store
-    * path + a data-dir fingerprint, so an in-JVM regen rebuilds.
-    */
-  private val ivfLifecycleMemo = new graft.util.SessionMemo[String, Boolean]
-
   private def lifecycleIvfStore(s: SparkSession, d: String, qname: String,
       tombstone: Boolean = false)
       : (DataFrame, Similarity.IvfIndex, DataFrame, String) = {
@@ -2766,19 +2708,15 @@ object LlmOps {
     val base = emb.filter(col("vec_id") % 3 < 2)
     val shard = emb.filter(col("vec_id") % 3 === 2)
     val probes = emb.filter(col("vec_id") < 5)
-    val idxBase = Similarity.cachedIvfIndex(s, base, d, "vec_id",
-      "embedding", 512, keySuffix = "lifecycle-base")
+    val idxBase = Similarity.buildIvfIndex(s, base, "vec_id", "embedding", 512)
+      .persisted
     val path = graft.util.Tables.scratch(d, qname)
-    ivfLifecycleMemo.getOrElseUpdate(s,
-      s"$path#${graft.util.SessionMemo.pathFingerprint(d)}#$tombstone") {
-      Similarity.writeIvfIndex(idxBase, path)
-      Similarity.appendToIvfIndex(shard, "vec_id", "embedding", path, "shard1")
-      if (tombstone)
-        Similarity.tombstoneIvfIndex(s, path,
-          emb.filter(col("vec_id") % 4 === 1).select("vec_id"),
-          "vec_id", "takedown1")
-      true
-    }: Unit
+    Similarity.writeIvfIndex(idxBase, path)
+    Similarity.appendToIvfIndex(shard, "vec_id", "embedding", path, "shard1")
+    if (tombstone)
+      Similarity.tombstoneIvfIndex(s, path,
+        emb.filter(col("vec_id") % 4 === 1).select("vec_id"),
+        "vec_id", "takedown1")
     val unionInv = idxBase.inverted.unionByName(
       Similarity.assignToCentroids(s, shard, "vec_id", "embedding",
         idxBase.centroids))
@@ -2891,11 +2829,7 @@ object LlmOps {
         lifecycleIvfStore(s, d, "s16_ivf", tombstone = true)
       val np = math.max(1, idxBase.centroids.length * 2 / 5)
       val dest = graft.util.Tables.scratch(d, "s16_ivf_compacted")
-      ivfLifecycleMemo.getOrElseUpdate(s,
-        s"$dest#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.compactIvfIndex(s, path, dest)
-        true
-      }: Unit
+      Similarity.compactIvfIndex(s, path, dest)
       val stored = Similarity.readIvfIndex(s, dest)
       val liveInv = unionInv.filter(col("neighbor_id") % 4 =!= 1)
       val mem = Similarity.IvfIndex(liveInv, idxBase.centroids)
@@ -2963,18 +2897,14 @@ object LlmOps {
           transform(col("embedding"),
             x => (x + lit(1.0f)).cast("float")).as("embedding"))
       val probes = emb.filter(col("vec_id") < 5)
-      val idxBase = Similarity.cachedIvfIndex(s, base, d, "vec_id",
-        "embedding", 512, keySuffix = "lifecycle-base")
+      val idxBase = Similarity.buildIvfIndex(s, base, "vec_id", "embedding", 512)
+        .persisted
       val path = graft.util.Tables.scratch(d, "s17_ivf")
       val dest = graft.util.Tables.scratch(d, "s17_ivf_requantized")
-      ivfLifecycleMemo.getOrElseUpdate(s,
-        s"$path#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.writeIvfIndex(idxBase, path)
-        Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", path,
-          "drift1")
-        Similarity.requantizeIvfIndex(s, path, dest, 512)
-        true
-      }: Unit
+      Similarity.writeIvfIndex(idxBase, path)
+      Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", path,
+        "drift1")
+      Similarity.requantizeIvfIndex(s, path, dest, 512)
       // health: fit-time baseline vs the drifted live store (one agg
       // job), vs the repaired store's publish-time baseline (no job —
       // measured once at requantize publish, read from the manifest)
@@ -2997,14 +2927,6 @@ object LlmOps {
           lit(h2.occMaxOverMean < h1.occMaxOverMean &&
             h2.meanResidual < h1.meanResidual).as("requantize_repairs_health"))
     })
-
-  /** Memo over [[Similarity.compactIvfGenerations]]'s per-store outcome —
-    * the s18 choreography's report must survive memo-hits (the
-    * rewritten-generation names feed the declared booleans), so unlike
-    * [[ivfLifecycleMemo]] the VALUE is the report, not a marker.
-    */
-  private val genCompactionMemo =
-    new graft.util.SessionMemo[String, Similarity.GenCompaction]
 
   /** s18 — INCREMENTAL generational compaction ([[Similarity
     * .compactIvfGenerations]] — the round-16 verdict's ask 2): s16's
@@ -3041,19 +2963,16 @@ object LlmOps {
       val shard1 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
       val shard2 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 1)
       val probes = emb.filter(col("vec_id") < 5)
-      val idxBase = Similarity.cachedIvfIndex(s, base, d, "vec_id",
-        "embedding", 512, keySuffix = "lifecycle-base")
+      val idxBase = Similarity.buildIvfIndex(s, base, "vec_id", "embedding", 512)
+        .persisted
       val path = graft.util.Tables.scratch(d, "s18_ivf")
-      val report = genCompactionMemo.getOrElseUpdate(s,
-        s"$path#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.writeIvfIndex(idxBase, path)
-        Similarity.appendToIvfIndex(shard1, "vec_id", "embedding", path, "shard1")
-        Similarity.appendToIvfIndex(shard2, "vec_id", "embedding", path, "shard2")
-        Similarity.tombstoneIvfIndex(s, path,
-          emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 0)
-            .select("vec_id"), "vec_id", "takedown1")
-        Similarity.compactIvfGenerations(s, path, 0.1)
-      }
+      Similarity.writeIvfIndex(idxBase, path)
+      Similarity.appendToIvfIndex(shard1, "vec_id", "embedding", path, "shard1")
+      Similarity.appendToIvfIndex(shard2, "vec_id", "embedding", path, "shard2")
+      Similarity.tombstoneIvfIndex(s, path,
+        emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 0)
+          .select("vec_id"), "vec_id", "takedown1")
+      val report = Similarity.compactIvfGenerations(s, path, 0.1)
       val meta = Similarity.readIvfMeta(s, path)
       val onlyHot = report.rewritten.map(_._1) == Seq("shard1") &&
         report.coldGens.sorted == Seq("base", "shard2") &&
@@ -3112,14 +3031,6 @@ object LlmOps {
     if (!errs.isEmpty) throw errs.peek()
   }
 
-  /** Memo over the s19 concurrent-mutation choreography: the declared
-    * booleans need the manifest snapshots and the compaction report, so
-    * the VALUE carries (gens after the concurrent phases, the report) —
-    * the genCompactionMemo discipline.
-    */
-  private val s19Memo = new graft.util.SessionMemo[String,
-    (Similarity.GenCompaction, Seq[String])]
-
   /** s19 — CONCURRENT store mutations ([[Similarity.mutateIvfMeta]] —
     * the round-17 verdict's ask 1): the manifest that made every store
     * mutation crash-safe was a plain read-modify-write, so two writers
@@ -3164,27 +3075,24 @@ object LlmOps {
       val shardB = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 1)
       val shardC = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 3)
       val probes = emb.filter(col("vec_id") < 5)
-      val idxBase = Similarity.cachedIvfIndex(s, base, d, "vec_id",
-        "embedding", 512, keySuffix = "lifecycle-base")
+      val idxBase = Similarity.buildIvfIndex(s, base, "vec_id", "embedding", 512)
+        .persisted
       val path = graft.util.Tables.scratch(d, "s19_ivf")
-      val (report, gens) = s19Memo.getOrElseUpdate(s,
-        s"$path#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.writeIvfIndex(idxBase, path)
-        inParallel(
-          () => Similarity.appendToIvfIndex(shardA, "vec_id", "embedding",
-            path, "cc_a"),
-          () => Similarity.appendToIvfIndex(shardB, "vec_id", "embedding",
-            path, "cc_b"))
-        Similarity.tombstoneIvfIndex(s, path,
-          emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 0)
-            .select("vec_id"), "vec_id", "takedown1")
-        var rep: Similarity.GenCompaction = null
-        inParallel(
-          () => rep = Similarity.compactIvfGenerations(s, path, 0.1),
-          () => Similarity.appendToIvfIndex(shardC, "vec_id", "embedding",
-            path, "cc_c"))
-        (rep, Similarity.readIvfMeta(s, path).gens)
-      }
+      Similarity.writeIvfIndex(idxBase, path)
+      inParallel(
+        () => Similarity.appendToIvfIndex(shardA, "vec_id", "embedding",
+          path, "cc_a"),
+        () => Similarity.appendToIvfIndex(shardB, "vec_id", "embedding",
+          path, "cc_b"))
+      Similarity.tombstoneIvfIndex(s, path,
+        emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 4 === 0)
+          .select("vec_id"), "vec_id", "takedown1")
+      var report: Similarity.GenCompaction = null
+      inParallel(
+        () => report = Similarity.compactIvfGenerations(s, path, 0.1),
+        () => Similarity.appendToIvfIndex(shardC, "vec_id", "embedding",
+          path, "cc_c"))
+      val gens = Similarity.readIvfMeta(s, path).gens
       val allCommitted = gens.toSet ==
         Set("base", "cc_a.c1", "cc_b", "cc_c")
       val onlyHot = report.rewritten == Seq("cc_a" -> "cc_a.c1")
@@ -3213,13 +3121,6 @@ object LlmOps {
     * on. At any larger dir the window selects the same-shaped prefix.
     */
   private val S20SliceMaxId = 20000L
-
-  /** Memo over the s20 routing choreography — the declared booleans need
-    * both branches' [[Similarity.MaintenanceOutcome]]s plus the healthy
-    * store's manifest-identity reading, so the VALUE carries all three.
-    */
-  private val s20Memo = new graft.util.SessionMemo[String,
-    (Similarity.MaintenanceOutcome, Similarity.MaintenanceOutcome, Boolean)]
 
   /** s20 — HEALTH-TRIGGERED maintenance routing ([[Similarity
     * .maintainIvfIndex]] — the round-17 verdict's ask 3): s17 measures
@@ -3261,28 +3162,24 @@ object LlmOps {
         transform(col("embedding"),
           x => (x + lit(1.0f)).cast("float")).as("embedding"))
       val probes = emb.filter(col("vec_id") < 5)
-      val idx = Similarity.cachedIvfIndex(s, base, d, "vec_id",
-        "embedding", 512, keySuffix = "s20-base")
+      val idx = Similarity.buildIvfIndex(s, base, "vec_id", "embedding", 512)
+        .persisted
       val driftPath = graft.util.Tables.scratch(d, "s20_ivf_drift")
       val driftDest = graft.util.Tables.scratch(d, "s20_ivf_drift_repaired")
       val okPath = graft.util.Tables.scratch(d, "s20_ivf_healthy")
       val okDest = graft.util.Tables.scratch(d, "s20_ivf_healthy_dest")
-      val (outDrift, outOk, okUntouched) = s20Memo.getOrElseUpdate(s,
-        s"$driftPath#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        Similarity.writeIvfIndex(idx, driftPath)
-        Similarity.appendToIvfIndex(drifted, "vec_id", "embedding",
-          driftPath, "drift1")
-        val o1 = Similarity.maintainIvfIndex(s, driftPath, driftDest, 512)
-        Similarity.writeIvfIndex(idx, okPath)
-        Similarity.appendToIvfIndex(shard, "vec_id", "embedding",
-          okPath, "shard1")
-        val bytesBefore = graft.util.IndexStore.manifestBytes(s, okPath)
-        val o2 = Similarity.maintainIvfIndex(s, okPath, okDest, 512)
-        val untouched = java.util.Arrays.equals(bytesBefore,
-          graft.util.IndexStore.manifestBytes(s, okPath)) &&
-          !graft.util.IndexStore.committed(s, okDest)
-        (o1, o2, untouched)
-      }
+      Similarity.writeIvfIndex(idx, driftPath)
+      Similarity.appendToIvfIndex(drifted, "vec_id", "embedding",
+        driftPath, "drift1")
+      val outDrift = Similarity.maintainIvfIndex(s, driftPath, driftDest, 512)
+      Similarity.writeIvfIndex(idx, okPath)
+      Similarity.appendToIvfIndex(shard, "vec_id", "embedding",
+        okPath, "shard1")
+      val bytesBefore = graft.util.IndexStore.manifestBytes(s, okPath)
+      val outOk = Similarity.maintainIvfIndex(s, okPath, okDest, 512)
+      val okUntouched = java.util.Arrays.equals(bytesBefore,
+        graft.util.IndexStore.manifestBytes(s, okPath)) &&
+        !graft.util.IndexStore.committed(s, okDest)
       val repairedHealth = Similarity.readIvfMeta(s, driftDest).health.get
       val driftedRepaired = outDrift.repaired &&
         repairedHealth.occMaxOverMean < outDrift.current.occMaxOverMean &&
@@ -3464,21 +3361,21 @@ object LlmOps {
   /** p18's keep-set as a reusable plan: decontaminated curation's final
     * (source, doc_id, quality_score, rank) selection — p18 declares it
     * directly; p19 lays it out for training. One derivation, two
-    * declared surfaces.
+    * declared surfaces. Each calling query `q` builds its own train and
+    * eval stores under `<q>_train_index` / `<q>_eval_index`.
     */
-  private def decontaminatedKeepSet(s: SparkSession, d: String): DataFrame = {
+  private def decontaminatedKeepSet(s: SparkSession, d: String,
+      q: String): DataFrame = {
     val docs = documents(s, d)
     val train = docs.filter(col("doc_id") % 3 < 2)
-    val trainIdx = graft.util.Tables.scratch(d, "p18_train_index")
-    val evalIdx = graft.util.Tables.scratch(d, "p18_eval_index")
-    ensureDedupStore(s, d, trainIdx) {
-      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text", trainIdx, 0.5)
-      Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
-        "doc_id", "text", trainIdx, "shard1", 0.5)
-      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 2),
-        "doc_id", "text", evalIdx, 0.5)
-    }
+    val trainIdx = graft.util.Tables.scratch(d, s"${q}_train_index")
+    val evalIdx = graft.util.Tables.scratch(d, s"${q}_eval_index")
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 0),
+      "doc_id", "text", trainIdx, 0.5)
+    Dedup.appendToMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
+      "doc_id", "text", trainIdx, "shard1", 0.5)
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 2),
+      "doc_id", "text", evalIdx, 0.5)
     val contaminated = Dedup.minhashPairsIndexVsIndex(s, trainIdx, evalIdx, 0.5)
       .select(col("a_id").as("doc_id")).distinct()
     val keepers = Dedup
@@ -3499,7 +3396,7 @@ object LlmOps {
     Some(s"""$p18KeepSql
             |SELECT source, doc_id, quality_score, CAST(rn AS BIGINT) AS rank
             |FROM r, n WHERE rn <= cap ORDER BY source, rank""".stripMargin),
-    (s, d) => decontaminatedKeepSet(s, d).orderBy("source", "rank"))
+    (s, d) => decontaminatedKeepSet(s, d, "p18").orderBy("source", "rank"))
 
   /** p19 — the pipeline's END-TO-END layout (the round-16 verdict's
     * ask 6): p18 stops at the selected keep-set; a training run still
@@ -3551,7 +3448,7 @@ object LlmOps {
             |    AS order_checksum
             |FROM pk_g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     (s, d) => {
-      packedRows(s, d)
+      packedRows(s, d, "p19")
         .groupBy("shard", "chunk")
         .agg(count(lit(1)).as("n_docs"),
           sum("tok").as("tokens_started"),
@@ -3568,8 +3465,8 @@ object LlmOps {
     * exact prefix-sum packing columns — one derivation, two declared
     * surfaces (p19 aggregates the layout; p20 materializes it).
     */
-  private def packedRows(s: SparkSession, d: String): DataFrame = {
-    val kept = decontaminatedKeepSet(s, d).select("doc_id")
+  private def packedRows(s: SparkSession, d: String, q: String): DataFrame = {
+    val kept = decontaminatedKeepSet(s, d, q).select("doc_id")
     val toks = kept.join(documents(s, d).select(col("doc_id"),
       TextAnalysis.wordCount(col("text")).as("tok")), Seq("doc_id"))
     val sharded = graft.llm.Curation.shuffleShards(toks, "doc_id", "pack0", 8)
@@ -3581,13 +3478,6 @@ object LlmOps {
       .withColumn("chunk", expr("cumb div 256"))
       .withColumn("endchunk", expr("(cumb + tok - 1) div 256"))
   }
-
-  /** Memo over the p20 materialization — the VALUE is the plan-side
-    * manifest [[graft.llm.Curation.writePackedShards]] committed, which
-    * the declared read-back equality compares against per run.
-    */
-  private val p20Memo = new graft.util.SessionMemo[String,
-    Seq[graft.llm.Curation.ShardManifestEntry]]
 
   /** p20 — MATERIALIZED shard sink with a file manifest ([[graft.llm
     * .Curation.writePackedShards]] — the round-17 verdict's ask 5): p19
@@ -3636,12 +3526,9 @@ object LlmOps {
     (s, d) => {
       import s.implicits._
       val out = graft.util.Tables.scratch(d, "p20_shards")
-      val manifest = p20Memo.getOrElseUpdate(s,
-        s"$out#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        graft.llm.Curation.writePackedShards(
-          packedRows(s, d).select("shard", "pos", "doc_id", "tok", "chunk"),
-          out)
-      }
+      val manifest = graft.llm.Curation.writePackedShards(
+        packedRows(s, d, "p20").select("shard", "pos", "doc_id", "tok", "chunk"),
+        out)
       val manifestDf = manifest
         .map(e => (e.shard, e.nDocs, e.nTokens, e.nChunks, e.orderChecksum))
         .toDF("shard", "n_docs", "n_tokens", "n_chunks", "order_checksum")
@@ -3731,13 +3618,10 @@ object LlmOps {
       import s.implicits._
       val nWorkers = 3
       val step = 3L // per-worker chunks consumed at the checkpoint
-      val out = graft.util.Tables.scratch(d, "p20_shards")
-      val manifest = p20Memo.getOrElseUpdate(s,
-        s"$out#${graft.util.SessionMemo.pathFingerprint(d)}") {
-        graft.llm.Curation.writePackedShards(
-          packedRows(s, d).select("shard", "pos", "doc_id", "tok", "chunk"),
-          out)
-      }
+      val out = graft.util.Tables.scratch(d, "p21_shards")
+      val manifest = graft.llm.Curation.writePackedShards(
+        packedRows(s, d, "p21").select("shard", "pos", "doc_id", "tok", "chunk"),
+        out)
       val mdf = manifest.map(e => (e.shard, e.nChunks))
         .toDF("shard", "n_chunks")
         .withColumn("worker", col("shard") % nWorkers)

@@ -318,15 +318,7 @@ object ServeMain {
       .load(s"$modelDir/feature_engineering")
     val tt = new graft.features.TargetTransformer("price")
       .load(s"$modelDir/target_transform.json")
-    val model: org.apache.spark.ml.Transformer = modelType match {
-      case "rf" => org.apache.spark.ml.regression.RandomForestRegressionModel
-        .load(s"$modelDir/$modelType")
-      case "lr" => org.apache.spark.ml.regression.LinearRegressionModel
-        .load(s"$modelDir/$modelType")
-      case "gbt" => org.apache.spark.ml.regression.GBTRegressionModel
-        .load(s"$modelDir/$modelType")
-      case other => sys.error(s"unknown --model-type $other")
-    }
+    val model = graft.ml.Persist.loadModelOfType(modelDir, modelType)
     val predictor = new Predictor(fe, model, tt)
     val schema = opts.get("schema-from")
       .map(p => spark.read.parquet(p).schema)

@@ -43,7 +43,6 @@ object ScaleProbe {
           rows.take(20).foreach(r => println(s"PROBE query $name $d ROW $r"))
           spark.catalog.clearCache()
           graft.util.Tables.dropGraftTempViews(spark)
-          graft.llm.Similarity.invalidateIvfIndexes(spark)
         }
       case other => sys.error(s"unknown probe: $other")
     }
@@ -280,7 +279,6 @@ object ScaleProbe {
         s" total=${res.simEvals.sum} brute_mass=${n * (n - 1)}")
       res.cleanup()
       res.edges.sparkSession.catalog.clearCache()
-      graft.llm.Similarity.invalidateIvfIndexes(spark)
     }
   }
 

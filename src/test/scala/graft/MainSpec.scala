@@ -87,4 +87,10 @@ class MainSpec extends SparkSpec {
     kv shouldBe Map("input-train" -> "a.parquet", "model-type" -> "gbt")
     flags shouldBe Set("overwrite")
   }
+
+  test("the --model-type loader refuses an unknown type before reading anything") {
+    val e = intercept[IllegalArgumentException](
+      graft.ml.Persist.loadModelOfType("/nonexistent-model-dir", "xgb"))
+    e.getMessage should include("xgb")
+  }
 }

@@ -234,8 +234,8 @@ class Round14OpsSpec extends SparkSpec {
     val emb = graft.util.Tables.embeddings(spark, d)
     val eligible = emb.filter(col("label") < 5)
     val probes = emb.filter(col("vec_id") < 5)
-    val idx = graft.llm.Similarity.cachedIvfIndex(
-      spark, emb, d, "vec_id", "embedding", 512)
+    val idx = graft.llm.Similarity.buildIvfIndex(
+      spark, emb, "vec_id", "embedding", 512).persisted
     val fidx = idx.copy(inverted = idx.inverted.join(
       eligible.select(col("vec_id").as("neighbor_id")),
       Seq("neighbor_id"), "left_semi"))

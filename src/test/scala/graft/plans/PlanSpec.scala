@@ -22,98 +22,119 @@ class PlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** (shuffles, broadcasts, codegenStages, scan widths sorted).
-    * Measured on a cold cache: the suite shares one session, and the
+  /** A final plan's shape: real shuffle and broadcast exchanges, the
+    * ReusedExchange reads of each kind (counted once each, in neither
+    * real count), codegen stages, scan widths sorted. Whether AQE reuses
+    * an identical exchange or runs it twice depends on stage completion
+    * order, so a plan's EXCHANGE STRUCTURE — `sh + reusedSh` shuffles and
+    * `bc + reusedBc` broadcasts — is the run-order-independent quantity;
+    * the real counts bound what actually ran.
+    */
+  private final case class Shape(sh: Int, bc: Int, reusedSh: Int,
+      reusedBc: Int, cg: Int, widths: Seq[Int])
+
+  /** Measured on a cold cache: the suite shares one session, and the
     * CacheManager substitutes InMemoryRelation for any plan fragment an
     * earlier suite cached over the same parquet path — which silently
     * changes exchange counts with run order (seen once: s02 9-vs-10).
+    * Each plan line is classified once, by its operator: a ReusedExchange
+    * line names the exchange it reuses
+    * (`ReusedExchange [..], Exchange hashpartitioning(..)`).
     */
-  private def finalShape(name: String): (Int, Int, Int, Seq[Int]) = {
+  private def finalShape(name: String): Shape = {
     spark.catalog.clearCache()
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
     val full = df.queryExecution.executedPlan.toString
     val p = full.split("== Initial Plan ==").head
-    val ex = "Exchange".r.findAllIn(p).length
-    val bc = "BroadcastExchange".r.findAllIn(p).length
-    val cg = """\*\((\d+)\)""".r.findAllMatchIn(p).map(_.group(1)).toSet.size
-    val widths = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(p)
-      .map(_.group(1).count(_ == ':')).toSeq.sorted
+    val (reused, real) = p.split("\n").toSeq.filter(_.contains("Exchange"))
+      .partition(_.contains("ReusedExchange"))
+    def broadcast(l: String) = l.contains("BroadcastExchange")
+    val shape = Shape(real.count(!broadcast(_)), real.count(broadcast),
+      reused.count(!broadcast(_)), reused.count(broadcast),
+      """\*\((\d+)\)""".r.findAllMatchIn(p).map(_.group(1)).toSet.size,
+      "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(p)
+        .map(_.group(1).count(_ == ':')).toSeq.sorted)
     assert(!p.contains("Python"), s"$name: Python eval crept into the plan")
-    (ex - bc, bc, cg, widths)
+    info(s"$name: $shape")
+    shape
   }
 
   test("q14 flagship join: dim broadcast, pruned 2-col scans") {
-    val (sh, bc, cg, w) = finalShape("q14_join_agg")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("q14_join_agg")
     (sh, bc, w) shouldBe ((2, 1, Seq(2, 2)))
     cg should be >= 2 // join + agg stay inside whole-stage codegen
   }
 
   test("a02 capping: two-level prefix sum, no global-order window") {
-    val (sh, bc, cg, w) = finalShape("a02_capping")
-    (bc, w) shouldBe ((4, Seq(1, 1, 3)))
-    // same AQE exchange-reuse wobble as s02 below: depending on stage
-    // completion order across a shared-session suite run, one of the
-    // prefix-sum subtrees occasionally rides a reused exchange (observed
-    // 11 in-suite vs 12 isolated; 11 is the BETTER plan). Pin the band.
-    sh should (be >= 11 and be <= 12)
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("a02_capping")
+    w shouldBe Seq(1, 1, 3)
+    // four broadcasts in the plan; AQE serves up to two prefix-sum
+    // shuffles from a reused exchange, and one shuffle is its runtime
+    // call (measured 7 or 8 real shuffles + 2 reused across full-suite,
+    // PlanSpec-alone and repeated same-session runs, no cache kept)
+    bc + rbc shouldBe 4
+    (sh + rsh) should (be >= 9 and be <= 10)
+    rsh should be <= 2
     cg should be >= 5
   }
 
   test("d02 minhash: banded candidate join, one pruned scan feeds the " +
       "cached shingles") {
-    val (sh, bc, cg, w) = finalShape("d02_minhash_lsh")
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("d02_minhash_lsh")
     // the scan-spread (round 18) repartitions the 2-col source once and
     // the cached shingle frame feeds band keys AND both verify sides —
     // ONE pruned documents scan where the pre-spread plan scanned it four
     // times. Join strategies over the now-cached relation are AQE's call
-    // (observed 3 plain shuffles / 0 broadcasts isolated); pin bands, not
-    // the wobble — a lost bucketing would blow far past them.
+    // (measured 3 real shuffles, 0 broadcasts, 0 reused in the full suite
+    // and alone); pin bands, not the wobble — a lost bucketing would blow
+    // far past them.
     w shouldBe Seq(2)
-    sh should (be >= 2 and be <= 4)
-    bc should (be >= 0 and be <= 3)
+    sh should (be >= 2 and be <= 3)
+    bc should be <= 1
+    rsh + rbc should be <= 1
     cg should be >= 3
   }
 
   test("d07 components: per-round plan stays checkpoint-truncated") {
-    val (sh, bc, _, w) = finalShape("d07_neardup_components")
+    val Shape(sh, bc, _, _, _, w) = finalShape("d07_neardup_components")
     (sh, bc, w) shouldBe ((1, 0, Seq()))
   }
 
   test("s02 ivf: sampled fit + nprobe scan keeps probe side broadcast") {
-    val (sh, bc, _, _) = finalShape("s02_cosine_topk_ivf")
-    bc shouldBe 7
-    // AQE occasionally reuses one exchange across the fit/scan subtrees
-    // depending on stage completion order (observed 9-vs-10 across
-    // otherwise-identical suite runs, both full-suite and isolated; 9 is
-    // the BETTER plan). Pin the band, not the wobble — a real regression
-    // (lost broadcast, extra shuffle stage) lands well outside it.
-    sh should (be >= 9 and be <= 10)
+    val Shape(sh, bc, rsh, rbc, _, _) = finalShape("s02_cosine_topk_ivf")
+    // seven broadcasts in the plan; AQE serves one shuffle across the
+    // fit/scan subtrees from a reused exchange, and one join's shuffle is
+    // AQE's runtime call (measured 7 or 8 real shuffles + 1 reused across
+    // repeated runs in one session, with no cache kept between them)
+    bc + rbc shouldBe 7
+    (sh + rsh) should (be >= 8 and be <= 9)
+    rsh + rbc should be <= 1
   }
 
   test("x10 bloom join: probe is codegen'd, no extra shuffle") {
-    val (sh, bc, cg, w) = finalShape("x10_bloom_join")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("x10_bloom_join")
     (sh, bc, w) shouldBe ((2, 1, Seq(2, 3)))
     cg should be >= 2
   }
 
   test("x11 bucketed join: zero broadcast, layout-co-located") {
-    val (sh, bc, _, w) = finalShape("x11_bucketed_join")
+    val Shape(sh, bc, _, _, _, w) = finalShape("x11_bucketed_join")
     (sh, bc, w) shouldBe ((2, 0, Seq(2, 2)))
   }
 
   test("j03 auto range join: conf-scoped result stays driver-bounded") {
-    val (sh, bc, _, w) = finalShape("j03_range_join_auto")
+    val Shape(sh, bc, _, _, _, w) = finalShape("j03_range_join_auto")
     (sh, bc, w) shouldBe ((0, 0, Seq()))
   }
 
   test("st04 stream-stream join result agg") {
-    val (sh, bc, _, w) = finalShape("st04_stream_stream_join")
+    val Shape(sh, bc, _, _, _, w) = finalShape("st04_stream_stream_join")
     (sh, bc, w) shouldBe ((2, 0, Seq()))
   }
 
   test("m16 pca: moment rows stay a driver-sized local relation") {
-    val (sh, bc, _, w) = finalShape("m16_pca")
+    val Shape(sh, bc, _, _, _, w) = finalShape("m16_pca")
     (sh, bc, w) shouldBe ((0, 0, Seq()))
   }
 
@@ -123,12 +144,12 @@ class PlanSpec extends SparkSpec {
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     p should include("TakeOrdered") // distributed top-k, not a global sort
-    val (sh, bc, _, w) = finalShape("p13_weighted_sample")
+    val Shape(sh, bc, _, _, _, w) = finalShape("p13_weighted_sample")
     (sh, bc, w) shouldBe ((0, 0, Seq(2)))
   }
 
   test("t17 lm perplexity: fused scoring — only calibration/agg exchanges, model broadcast once") {
-    val (sh, bc, _, w) = finalShape("t17_lm_perplexity")
+    val Shape(sh, bc, _, _, _, w) = finalShape("t17_lm_perplexity")
     bc shouldBe 1 // the per-lang threshold table; the LM itself rides the expression, not a join
     w shouldBe Seq(2, 3) // pruned doc scans (fit path, scoring path)
     // corpus-shaped work is the two scans; exchanges carry per-doc or
@@ -138,24 +159,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("mm07 video signatures: decode scan + signature groupBy, nothing pairwise") {
-    val (sh, bc, cg, w) = finalShape("mm07_video_signature_dedup")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("mm07_video_signature_dedup")
     (sh, bc, w) shouldBe ((2, 0, Seq(1))) // doc_id-only scan feeds the generator
     cg should be >= 2
   }
 
   test("w11 decayed sum: one window partition exchange + output sort only") {
-    val (sh, bc, cg, w) = finalShape("w11_decayed_sum")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("w11_decayed_sum")
     (sh, bc, w) shouldBe ((2, 0, Seq(5)))
     cg should be >= 2
   }
 
   test("s07 range search: broadcast probes + map-side threshold, sort only") {
-    val (sh, bc, _, w) = finalShape("s07_cosine_range")
+    val Shape(sh, bc, _, _, _, w) = finalShape("s07_cosine_range")
     (sh, bc, w) shouldBe ((1, 1, Seq(2, 2))) // the 1 shuffle is the output sort
   }
 
   test("w12 twap: window partitioning REUSED by the groupBy — no extra exchange") {
-    val (sh, bc, cg, w) = finalShape("w12_twap")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("w12_twap")
     // window's hashpartitioning(user_id) satisfies the aggregate's
     // clustering, so the whole chain rides ONE user_id exchange + the
     // output sort — 3 shuffles here would mean the reuse broke
@@ -164,7 +185,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("t18 lexical diversity: two-level agg over a pruned 2-col scan") {
-    val (sh, bc, cg, w) = finalShape("t18_lexical_diversity")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("t18_lexical_diversity")
     // (doc,tok) agg exchange (the only corpus-sized one, map-side
     // combined) + per-doc rollup + output sort
     (sh, bc, w) shouldBe ((3, 0, Seq(2)))
@@ -172,24 +193,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d16 containment: gram-bucketed joins, AQE picks the build sides") {
-    val (sh, bc, cg, w) = finalShape("d16_containment")
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("d16_containment")
     // post scan-spread (round 18): ONE 2-col gram-source scan (the spread
     // exchange fans it out to every gram consumer) + the doc_id-only scan
     w shouldBe Seq(1, 2)
     // AQE broadcasts the rare-gram and size tables at this SF and may
     // reuse exchanges across the gram consumers — pin bands, not the
     // wobble (a lost bucketing would add corpus-sized shuffles far
-    // outside them). The upper band absorbs the scan-spread exchange plus
-    // its ReusedExchange reads (up to 4 counted as plain Exchange by the
-    // regex; verified isolated: 12 = 8 real + 4 reused, joins all
-    // BroadcastHashJoin).
-    sh should (be >= 5 and be <= 12)
+    // outside them). Measured in the full suite and alone: 6 real
+    // shuffles + 2 reused, 3 real broadcasts + 2 reused, joins all
+    // BroadcastHashJoin.
+    sh should (be >= 5 and be <= 8)
     bc should (be >= 3 and be <= 6)
+    rsh + rbc should be <= 4
     cg should be >= 5
   }
 
   test("s08 maxsim: probes broadcast, two-level agg, ranked window") {
-    val (sh, bc, cg, w) = finalShape("s08_maxsim_topk")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("s08_maxsim_topk")
     // max-agg exchange + sum-agg exchange + rank window + output sort;
     // the probe bag rides ONE broadcast — the corpus is scanned once
     (sh, bc, w) shouldBe ((4, 1, Seq(2, 2)))
@@ -197,19 +218,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w13 ohlc: both windows + groupBy ride ONE (user,hour) exchange") {
-    val (sh, bc, cg, w) = finalShape("w13_ohlc")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("w13_ohlc")
     (sh, bc, w) shouldBe ((2, 0, Seq(5))) // partition exchange + output sort
     cg should be >= 2
   }
 
   test("mm08 audio fingerprints: decode scan + fp groupBy, nothing pairwise") {
-    val (sh, bc, cg, w) = finalShape("mm08_audio_fingerprint_dedup")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("mm08_audio_fingerprint_dedup")
     (sh, bc, w) shouldBe ((2, 0, Seq(1, 1))) // doc_id-only scans feed the encoders
     cg should be >= 2
   }
 
   test("t19 boilerplate grams: gram-keyed join, one-row threshold broadcast") {
-    val (sh, bc, cg, w) = finalShape("t19_boilerplate_grams")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("t19_boilerplate_grams")
     // scans: width-0 (the thr COUNT reads no columns), width-1 (the df
     // side prunes to text only), width-2 (doc_id+text gram side); the df
     // table and the one-row threshold ride broadcasts at this SF, so the
@@ -219,13 +240,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w14 rolling z-score: one user-partition window exchange + output sort") {
-    val (sh, bc, cg, w) = finalShape("w14_rolling_zscore")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("w14_rolling_zscore")
     (sh, bc, w) shouldBe ((2, 0, Seq(5))) // 5-col purchase scan, no joins
     cg should be >= 1
   }
 
   test("t20 gram novelty: gram-keyed min-attribution join, pruned scans") {
-    val (sh, bc, cg, w) = finalShape("t20_gram_novelty")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("t20_gram_novelty")
     // two (doc_id,text) gram scans (the attribution needs doc_id on both
     // sides); the min-per-gram table rides an AQE broadcast at this SF;
     // shuffles: min agg, per-doc rollup, output sort
@@ -248,7 +269,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d17 exact index: stored fp side broadcast-joined, sort is the only shuffle") {
-    val (sh, bc, cg, w) = finalShape("d17_exact_index")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("d17_exact_index")
     (sh, bc, w) shouldBe ((1, 1, Seq(2, 2))) // batch (doc_id,text) + index (fp,keeper)
     cg should be >= 2
   }
@@ -294,7 +315,7 @@ class PlanSpec extends SparkSpec {
 
   test("x13 approx grouped quantiles: one-pass sketch agg + broadcast-back, " +
       "pruned 2-col scans") {
-    val (sh, bc, cg, w) = finalShape("x13_grouped_quantiles_approx")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("x13_grouped_quantiles_approx")
     // orders scanned twice (sketch pass + rank-count pass), both pruned to
     // (o_orderpriority, o_totalprice); the 5-row sketch output rides a
     // broadcast back; shuffles: sketch agg, rank-count agg, output sort
@@ -304,7 +325,7 @@ class PlanSpec extends SparkSpec {
 
   test("d18 bloom index gate: short-circuit leg is scan-only, index side " +
       "broadcast, sort is the only shuffle") {
-    val (sh, bc, cg, w) = finalShape("d18_bloom_index_gate")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("d18_bloom_index_gate")
     // batch (doc_id,text) scanned by both legs; index (fp,keeper) joins
     // the maybe-leg via broadcast at this SF; the definite-new leg is a
     // pure filter-project — no exchange anywhere but the output sort
@@ -327,7 +348,7 @@ class PlanSpec extends SparkSpec {
 
   test("x14 sliding-window distinct: split exact/sketch plans, no Expand, " +
       "pruned 2-col scans") {
-    val (sh, bc, cg, w) = finalShape("x14_sliding_window_distinct")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("x14_sliding_window_distinct")
     // events scanned twice (exact pass + sketch pass), both pruned to
     // (ts, user_id); shuffles: the exact distinct's two-stage agg (2),
     // the sketch agg, the output sort; the 722-row sketch output rides a
@@ -342,29 +363,29 @@ class PlanSpec extends SparkSpec {
 
   test("p15 curation pipeline: dedup semi-join + scoring scan + one " +
       "source-partition window, every documents scan pruned") {
-    val (sh, bc, cg, w) = finalShape("p15_curation_pipeline")
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("p15_curation_pipeline")
     // scans: documents ×4 (fp keeper agg, scoring kernel, source attach,
     // cap count) + the 1-row cap; shuffles: keeper agg, survivor count,
     // the source-partition rank window, its upstream agg, the output
-    // sort; keeper set / source side / cap scalar ride broadcasts
-    (sh, bc) shouldBe ((5, 5))
+    // sort; keeper set / source side / cap scalar ride broadcasts (one
+    // of them may be a reused exchange: measured 4 real + 1 reused)
+    (sh + rsh, bc + rbc) shouldBe ((4, 5))
     w.max should be <= 2 // no documents scan reads the full row
     cg should be >= 2
   }
 
   test("p18 decontaminated curation: p15's stages + the stored-index " +
       "contamination join, pruned scans, one bounded cap cross only") {
-    val (sh, bc, cg, w) = finalShape("p18_decontaminated_curation")
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("p18_decontaminated_curation")
     // p15's shape (keeper agg, scoring scan, source attach, quota window,
     // output sort) + the d22 contamination path (stored band-key join,
     // two hash-table attach joins, contaminated-id distinct) with the
     // tiny contaminated set and the keeper/source/cap sides riding
-    // broadcasts — broadcast count pinned exactly so a stage silently
-    // de-broadcasting or the band join degenerating shows up here; the
-    // shuffle count rides the a02/s02 AQE exchange-reuse wobble
-    // (observed 8 isolated vs 10 in-suite; 8 is the BETTER plan)
-    bc shouldBe 10
-    sh should (be >= 8 and be <= 10)
+    // broadcasts — exchange structure pinned exactly so a stage silently
+    // de-broadcasting or the band join degenerating shows up here; up to
+    // two broadcasts may be reused exchanges (measured 8 real + 2 reused)
+    (sh + rsh, bc + rbc) shouldBe ((8, 10))
+    rsh + rbc should be <= 2
     w.max should be <= 2 // every documents/index scan column-pruned
     cg should be >= 2
     // the only non-equi join is the 1-row quota-cap scalar cross (the
@@ -377,16 +398,16 @@ class PlanSpec extends SparkSpec {
 
   test("p19 curate→pack→shard: p18's stages + ONE shard exchange, " +
       "keep-set rides broadcasts, pruned scans") {
-    val (sh, bc, cg, w) = finalShape("p19_curate_pack_shard")
+    val Shape(sh, bc, rsh, rbc, cg, w) = finalShape("p19_curate_pack_shard")
     // p18's plan (8-shuffle keep-set derivation, 10 broadcasts) + the
     // composition's marginal cost: one hash exchange on the shard key
     // feeding the per-shard window sort (shuffleShards' honest cost —
     // packing reuses the same window partitioning, no exchange of its
     // own), and one broadcast attaching token counts to the tiny
-    // keep-set. Shuffle count rides the a02/s02/p18 AQE exchange-reuse
-    // wobble; 9 (measured isolated) is the BETTER plan.
-    bc shouldBe 11
-    sh should (be >= 9 and be <= 11)
+    // keep-set. Up to two broadcasts may be reused exchanges, as in p18
+    // (measured 9 real + 2 reused).
+    (sh + rsh, bc + rbc) shouldBe ((9, 11))
+    rsh + rbc should be <= 2
     w.max should be <= 2 // every documents scan column-pruned
     cg should be >= 2
     val p = SparkEntry.queries("p19_curate_pack_shard")(spark, sf)
@@ -398,7 +419,7 @@ class PlanSpec extends SparkSpec {
 
   test("mm09 media ANN handoff: decode scan + bounded probe broadcast + " +
       "top-k agg, 1-col scans") {
-    val (sh, bc, cg, w) = finalShape("mm09_media_ann_handoff")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("mm09_media_ann_handoff")
     // scans: documents (doc_id) twice (corpus + probe legs); shuffles:
     // the top-k heap agg and the output sort; the 5-probe side rides the
     // one broadcast (a deliberate bounded nested-loop — 5 rows × corpus,
@@ -409,7 +430,7 @@ class PlanSpec extends SparkSpec {
 
   test("x15 window heavy hitters: count agg + window rank over the count " +
       "table, no Expand, pruned 2-col scan") {
-    val (sh, bc, cg, w) = finalShape("x15_window_heavy_hitters")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("x15_window_heavy_hitters")
     // one events scan pruned to (ts, user_id); shuffles: the
     // (window, user) count agg, the per-window rank, the output sort
     (sh, bc, w) shouldBe ((3, 0, Seq(2)))
@@ -421,7 +442,7 @@ class PlanSpec extends SparkSpec {
 
   test("p16 curriculum order: min/max scalar broadcast + stage window + " +
       "checksum agg, pruned documents scans") {
-    val (sh, bc, cg, w) = finalShape("p16_curriculum_order")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("p16_curriculum_order")
     // scans: documents (text) for the min/max pass, (doc_id, text) for
     // the staged rows; the 1-row min/max scalar rides the broadcast;
     // shuffles: the stage-partition rank window, the per-stage checksum
@@ -432,7 +453,7 @@ class PlanSpec extends SparkSpec {
 
   test("w15 interval union: ONE user-partition exchange feeds both " +
       "windows and both aggs, 3-col pruned scan") {
-    val (sh, bc, cg, w) = finalShape("w15_interval_union")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("w15_interval_union")
     // shuffles: the user_id window partition (the running-max and
     // segment-sum windows AND the (user, seg) / user aggs all reuse it —
     // user_id is a prefix of every downstream key) + the output sort
@@ -441,7 +462,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("p14 domain quota: one source-partition window + cap broadcast") {
-    val (sh, bc, cg, w) = finalShape("p14_domain_quota")
+    val Shape(sh, bc, _, _, cg, w) = finalShape("p14_domain_quota")
     // scans: documents (doc_id,text) for scores, (doc_id,source) for the
     // domain, (doc_id) for the cap count; shuffles: the source-partition
     // rank window, its upstream agg, the output sort; the cap scalar and
