@@ -2449,14 +2449,15 @@ object LlmOps {
     * measured 40 %-of-cells dial below the k-means tractability cap
     * (occupancy-constant cells, n ≲ 65 k), the two-level IVFADC
     * quantizer at its measured 20 %-of-composite-cells dial past it
-    * ([[routedIndex]] fits it). `emb`/`probes` carry
-    * (vec_id, embedding). Returns the ANN top-k and the probed-cell
-    * scan accounting (the scanned term counts exactly what the search
-    * scanned — both ride the same cell table).
+    * ([[routedIndex]] fits it; the caller passes the fitted index in).
+    * `probes` carry (vec_id, embedding). Returns the ANN top-k and the
+    * probed-cell scan accounting (the scanned term counts exactly what
+    * the search scanned — both ride the same cell table).
     */
-  private[operators] def routedAnnWithScan(s: SparkSession, emb: DataFrame,
+  private[operators] def routedAnnWithScan(s: SparkSession,
+      idx: Either[Similarity.IvfIndex, Similarity.Ivf2Index],
       probes: DataFrame, k: Int): (DataFrame, DataFrame) =
-    routedIndex(s, emb) match {
+    idx match {
       case Left(idx) =>
         val np = math.max(1, idx.centroids.length * 2 / 5)
         (Similarity.ivfSearch(s, idx, probes, "vec_id", "embedding", k, np)
@@ -2530,7 +2531,7 @@ object LlmOps {
       val probes = emb.filter(col("vec_id") < 5)
       val exact = Similarity.bruteTopK(s, emb, probes, "vec_id", "embedding", 10)
         .select("p_id", "neighbor_id")
-      val (ann, scanned) = routedAnnWithScan(s, emb, probes, 10)
+      val (ann, scanned) = routedAnnWithScan(s, routedIndex(s, emb), probes, 10)
       annRecallCounts(exact, ann, emb).crossJoin(scanned)
         .select(
           col("n_probes"),
@@ -2543,15 +2544,16 @@ object LlmOps {
     * verdict's mm09 directive: the handoff's 100 TB path, declared):
     * mm09 hands the decoded landmark vectors to the exact brute-force
     * stack and hash-pins the full top-k; this twin hands the SAME
-    * vector column to [[routedAnnWithScan]] — s13's route, s13's
-    * contract — so the media corpus rides the flat 512-cell quantizer
-    * at the gate SFs (500–5 000 docs) and the TWO-LEVEL IVFADC index on
-    * the scale curve (gsf2's 100 k docs onward — documents outnumber
-    * text embeddings 2.5×, so the media family crosses the flat cap
-    * EARLIER than s13 itself, which is precisely why the route belongs
-    * on this corpus). The media index is fit on the landmark vectors
-    * themselves, not the text embeddings. Contract terms are
-    * s13's verbatim: recall@10 ≥ 0.9 vs the exact brute-force baseline
+    * vector column to [[routedIndex]] and [[routedAnnWithScan]] —
+    * s13's route, s13's contract — so the media corpus rides the flat
+    * 512-cell quantizer at the gate SFs (500–5 000 docs) and the
+    * TWO-LEVEL IVFADC index on the scale curve (gsf2's 100 k docs
+    * onward — documents outnumber text embeddings 2.5×, so the media
+    * family crosses the flat cap EARLIER than s13 itself, which is
+    * precisely why the route belongs on this corpus). The media index
+    * is fit on the landmark vectors themselves, not the text
+    * embeddings. Contract terms are s13's verbatim: recall@10 ≥ 0.9 vs
+    * the exact brute-force baseline
     * over the decoded vectors, scan ≤ 50 % of the corpus, all in-plan.
     */
   val mm13 = QSpec(
@@ -2566,7 +2568,7 @@ object LlmOps {
       val probes = vecs.filter(col("vec_id") < 5)
       val exact = Similarity.bruteTopK(s, vecs, probes, "vec_id", "embedding", 10)
         .select("p_id", "neighbor_id")
-      val (ann, scanned) = routedAnnWithScan(s, vecs, probes, 10)
+      val (ann, scanned) = routedAnnWithScan(s, routedIndex(s, vecs), probes, 10)
       val out = annRecallCounts(exact, ann, vecs).crossJoin(scanned)
         .select(
           col("n_probes"),
