@@ -126,7 +126,7 @@ object Bench {
     if (only.isEmpty) {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-          "/root/repo/bench_out.json")), json + "\n")
+          "bench_out.json")), json + "\n")
       catch { case _: Throwable => () }
     }
     spark.stop()

@@ -20,6 +20,11 @@ import org.apache.spark.sql.types.StructType
   * The model is trained on log(price) (the SURVEY §7 fix of quirk Q2), so
   * the smearing inverse produces finite prices — unlike the reference,
   * whose exp(raw-price prediction) overflowed to inf on every row.
+  *
+  * Serving prepares both paths once per served schema: [[prepareSingle]]
+  * compiles a driver-local row evaluator, and [[prepareBatch]] keeps the
+  * analyzed `predictBatch` plan (FE analyzed and model broadcast once) and
+  * rebinds each upload into it, so a typed upload runs as one Spark job.
   */
 class Predictor(
     val preprocess: DataFrame => DataFrame,
@@ -61,5 +66,16 @@ class Predictor(
       new java.util.ArrayList[Row](), schema)
     val out = predictBatch(template).select(col("prediction_price"))
     new PreparedPredictor(out.queryExecution.analyzed, schema, "prediction_price")
+  }
+
+  /** Analyze `predictBatch` once over an empty relation of `schema`
+    * (nullable, as any file read is) and rebind each upload into that
+    * plan. See [[PreparedBatch]].
+    */
+  def prepareBatch(spark: SparkSession, schema: StructType): PreparedBatch = {
+    val template = spark.createDataFrame(
+      new java.util.ArrayList[Row](),
+      StructType(schema.fields.map(_.copy(nullable = true))))
+    new PreparedBatch(spark, predictBatch(template).queryExecution.analyzed)
   }
 }

@@ -5,7 +5,9 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression, RandomForestRegressor}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** rmse / r² / mae triple (ref: src/models/train.py:142-150). */
 final case class EvalMetrics(rmse: Double, r2: Double, mae: Double)
@@ -73,10 +75,29 @@ object Trainer {
       .setParallelism(8)
       .fit(df)
 
-  /** rmse/r2/mae in three evaluator passes (ref: src/models/train.py:142-150). */
-  def evaluate(predictions: DataFrame, labelCol: String): EvalMetrics =
-    EvalMetrics(
-      evaluator(labelCol, "rmse").evaluate(predictions),
-      evaluator(labelCol, "r2").evaluate(predictions),
-      evaluator(labelCol, "mae").evaluate(predictions))
+  /** rmse / r² / mae in ONE pass over (label, prediction), not one per
+    * metric: each pass re-runs the whole upstream transform (ref:
+    * src/models/train.py:142-150). The formulas are RegressionEvaluator's
+    * (spark.ml `RegressionMetrics`): with e = label − prediction, rmse =
+    * √(Σe²/n), mae = Σ|e|/n, r² = 1 − Σe²/SStot with SStot = the label's
+    * sample variance · (n − 1). NaN propagates as there; a null label or
+    * prediction fails, as the evaluator's row match does. The sums are
+    * observed metrics of one job that discards the rows: a plain `agg`
+    * adds a single-partition exchange, which AQE runs as a second job.
+    */
+  def evaluate(predictions: DataFrame, labelCol: String): EvalMetrics = {
+    val y = col(labelCol).cast(DoubleType)
+    val e = y - col("prediction").cast(DoubleType)
+    val obs = Observation("evaluate")
+    predictions.observe(obs, count(lit(1)).as("n"), count(e).as("n_e"),
+      sum(e * e).as("sse"), sum(abs(e)).as("sae"), var_samp(y).as("var_y"))
+      .write.format("noop").mode("overwrite").save()
+    val m = obs.get
+    val (n, nE) = (m("n").asInstanceOf[Long], m("n_e").asInstanceOf[Long])
+    require(n > 0, "evaluate: no rows")
+    require(nE == n, s"evaluate: ${n - nE} rows have a null $labelCol or prediction")
+    val sse = m("sse").asInstanceOf[Double]
+    val ssTot = Option(m("var_y")).fold(0.0)(_.asInstanceOf[Double] * (n - 1))
+    EvalMetrics(math.sqrt(sse / n), 1 - sse / ssTot, m("sae").asInstanceOf[Double] / n)
+  }
 }

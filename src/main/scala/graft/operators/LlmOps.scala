@@ -616,10 +616,15 @@ object LlmOps {
     * the in-plan exact baseline (left-semi on (p_id, neighbor_id)),
     * baseline size, probe count, and corpus size — every bounded-boolean
     * ANN contract selects its fractions from these four counts.
+    *
+    * Both sides are top-k lists, at most probes × k rows, so `ann` is
+    * broadcast by hint: left to AQE, the join is switched to a broadcast
+    * at runtime, and whether the exact side keeps a (p_id, neighbor_id)
+    * shuffle then depends on which stage finished first.
     */
   private def annRecallCounts(exact: DataFrame, ann: DataFrame,
       emb: DataFrame): DataFrame =
-    exact.join(ann, Seq("p_id", "neighbor_id"), "left_semi")
+    exact.join(broadcast(ann), Seq("p_id", "neighbor_id"), "left_semi")
       .agg(count(lit(1)).as("hits"))
       .crossJoin(exact.agg(count(lit(1)).as("total"),
         countDistinct(col("p_id")).as("n_probes")))

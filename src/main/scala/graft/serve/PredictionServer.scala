@@ -25,12 +25,15 @@ import graft.infer.{PreparedPredictor, Predictor}
   *    `prediction_price: null, dropped: true` (app.py's failed-transform
   *    warning path).
   *  - `POST /predict/batch` — a CSV upload (app.py's file_uploader flow,
-  *    same format as X_test.csv). This is a REAL distributed job:
-  *    `spark.read.csv` → full feature transform → model → smearing
-  *    inverse, returned as `id_annonce,prediction_price` CSV
-  *    (app.py:110-112's result frame). The result is written by the
-  *    executors and STREAMED to the response — no driver-side collect,
-  *    so batch size is bounded by cluster capacity, not driver heap.
+  *    same format as X_test.csv). This is a REAL distributed job, ONE per
+  *    upload: the full feature transform → model → smearing inverse plan
+  *    is analyzed once per server ([[graft.infer.PreparedBatch]], model
+  *    broadcast once), each upload is read with the served types (no
+  *    inference pass) and rebound into it, and the result is returned as
+  *    `id_annonce,prediction_price` CSV (app.py:110-112's result frame),
+  *    written by the executors and STREAMED to the response — no
+  *    driver-side collect, so batch size is bounded by cluster capacity,
+  *    not driver heap.
   *
   * Single-row eval is serialized on a lock: catalyst `Expression.eval`
   * trees may hold per-instance mutable state (codegen-fallback exprs,
@@ -218,29 +221,34 @@ final class PredictionServer(
     }
   }
 
-  /** Batch predictions WITHOUT a driver-side collect (round-15 advice:
-    * this was the one unbounded `collect()` left in the tree): the
-    * 2-column result is formatted and written BY THE EXECUTORS as a
-    * distributed CSV job, and the handler then streams the part files
-    * into a chunked response — O(io-buffer) driver heap at any batch
-    * size, where the old `collect()` held the whole result. Spark's
-    * `format_string` is Locale.US by construction, so a comma-decimal
-    * default locale (fr_FR) can't corrupt the 2-column CSV (the old
-    * Locale.ROOT guard, now enforced executor-side). The Spark job runs
-    * to completion BEFORE the response commits, so analysis errors (a
-    * CSV missing model columns) still surface as a clean 400.
+  /** The batch plan, analyzed once per server on its first upload (not
+    * at construction: ServeMain's start-up stays the single-row path's). */
+  private lazy val batch = predictor.prepareBatch(spark, schema)
+
+  /** Batch predictions WITHOUT a driver-side collect: the 2-column result
+    * is formatted and written BY THE EXECUTORS as a distributed CSV job,
+    * and the handler then streams the part files into a chunked response
+    * — O(io-buffer) driver heap at any batch size. Spark's `format_string`
+    * is Locale.US by construction, so a comma-decimal default locale
+    * (fr_FR) can't corrupt the 2-column CSV.
     *
-    * FILESYSTEM ASSUMPTION (round-16 advice, stated rather than hidden):
-    * the executors write their part files to a driver-local temp dir and
-    * the handler thread reads them back — valid in local mode (this
-    * server's deployment shape, like the reference's Streamlit app) and
-    * consistent with the pre-existing driver-local upload spool above,
-    * but a MULTI-NODE deployment must point both spool and output at a
-    * shared scheme-aware location (hdfs:///s3a://, resolved through the
-    * Hadoop FileSystem like graft.util.IndexStore does) or the part
-    * files land on machines the handler can't see. The old collect()
-    * path had no such assumption — it traded it for unbounded driver
-    * heap; this trade is the right one for the single-node twin.
+    * One Spark job per upload. The upload is read with a schema built
+    * from its own header line — the served type for each schema column,
+    * string for any other — so there is no header or inference pass, and
+    * it is rebound into the prepared plan ([[PreparedBatch]]), so the
+    * feature transform is not analyzed and the model not broadcast again.
+    * The job runs to completion BEFORE the response commits, so a client
+    * error still surfaces as a clean 400: a missing schema column, or
+    * (FAILFAST) a value that does not parse as its served type.
+    *
+    * FILESYSTEM ASSUMPTION: the executors write their part files to a
+    * driver-local temp dir and the handler thread reads them back — valid
+    * in local mode (this server's deployment shape, like the reference's
+    * Streamlit app) and consistent with the driver-local upload spool, but
+    * a MULTI-NODE deployment must point both spool and output at a shared
+    * scheme-aware location (hdfs:///s3a://, resolved through the Hadoop
+    * FileSystem like graft.util.IndexStore does) or the part files land on
+    * machines the handler can't see.
     */
   private def handleBatch(ex: HttpExchange): Unit = {
     require(ex.getRequestMethod == "POST", "POST a CSV body with a header row")
@@ -250,19 +258,20 @@ final class PredictionServer(
     try {
       java.nio.file.Files.copy(ex.getRequestBody, tmp,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val input = spark.read.option("header", "true")
-        .option("inferSchema", "true").csv(tmp.toString)
       import org.apache.spark.sql.functions.{col, format_string}
-      try predictor.predictBatch(input)
+      try batch(spark.read.schema(uploadSchema(tmp))
+          .option("header", "true").option("mode", "FAILFAST").csv(tmp.toString))
         .select(col("id_annonce"),
           format_string("%.2f", col("prediction_price")).as("prediction_price"))
         .write.mode("overwrite").csv(outDir.toString)
       catch {
-        // a CSV missing required columns fails analysis — that is the
-        // caller's upload, not a server fault: surface it as a 400
+        // the caller's upload, not a server fault: surface it as a 400
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
             s"batch CSV does not match the model's input schema: ${e.getMessage}")
+        case e: org.apache.spark.SparkException if malformed(e) =>
+          throw new IllegalArgumentException(
+            s"batch CSV has a value that does not parse as its column's type: ${e.getMessage}")
       }
       ex.getResponseHeaders.set("Content-Type", "text/csv")
       ex.sendResponseHeaders(200, 0) // chunked — length unknown unbuffered
@@ -283,6 +292,30 @@ final class PredictionServer(
       finally walk.close()
     }
   }
+
+  /** The read schema of a spooled upload, in its header's column order:
+    * the served type for a schema column, string for any other.
+    */
+  private def uploadSchema(csv: java.nio.file.Path): StructType = {
+    val reader = java.nio.file.Files.newBufferedReader(csv, UTF_8)
+    val header = try reader.readLine() finally reader.close()
+    require(header != null && header.nonEmpty, "POST a CSV body with a header row")
+    val served = schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    StructType(new com.univocity.parsers.csv.CsvParser(
+      new com.univocity.parsers.csv.CsvParserSettings).parseLine(header)
+      .map { n =>
+        val name = Option(n).getOrElse("")
+        StructField(name, served.getOrElse(name.toLowerCase, StringType))
+      })
+  }
+
+  /** A FAILFAST read that met a value it cannot parse as the column's type. */
+  private def malformed(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: org.apache.spark.SparkThrowable =>
+        Option(t.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
+      case _ => false
+    }
 }
 
 /** `runMain graft.serve.ServeMain --model-dir D [--model-type rf|lr|gbt]

@@ -75,7 +75,11 @@ object ExactQuantiles {
       .withColumn("next_bmin", lead("bmin", 1).over(wB))
       .select("bucket", "offset", "next_bmin")
 
-    val withN = inBucket.join(offsets, "bucket")
+    // offsets holds ≤ nBuckets+2 rows, the frequency table up to one row
+    // per distinct value: broadcast offsets by hint, so the join strategy
+    // (and the shuffles under it) is not an AQE runtime choice that flips
+    // with stage completion order
+    val withN = inBucket.join(broadcast(offsets), "bucket")
       .withColumn("cum", col("cum_in") + col("offset"))
       .withColumn("v_next", coalesce(col("v_next_in"), col("next_bmin")))
 

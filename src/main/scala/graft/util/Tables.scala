@@ -153,12 +153,15 @@ object Tables {
         "vocabulary. Repoint the predicates in the affected queries.")
   }
 
-  /** Scratch dir (inside the repo) for sink/round-trip queries. Keyed by the
-    * scale-factor dir name so concurrent sf runs don't clobber each other.
+  /** Scratch dir for sink/round-trip queries, under the working directory's
+    * `target/qtmp` (the checkout sbt and the mains run from), so two
+    * checkouts never write into each other. Keyed by the scale-factor dir
+    * name so concurrent sf runs don't clobber each other.
     */
   def scratch(sfDir: String, qname: String): String = {
     val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/qtmp/$sf/$qname"
+    java.nio.file.Paths.get("target", "qtmp", sf, qname)
+      .toAbsolutePath.toString
   }
 
   /** Drop every `__graft_*` temp view — the memory-sink tables the

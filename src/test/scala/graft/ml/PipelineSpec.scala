@@ -56,6 +56,33 @@ class PipelineSpec extends SparkSpec {
     rf.featureImportances.toArray.sum shouldBe 1.0 +- 1e-6
   }
 
+  test("evaluate's one aggregate equals RegressionEvaluator's three passes") {
+    val preds = (1 to 500).map { i =>
+      val y = 100.0 + i * 3.7 + (i % 7) * 11.0
+      (y, y + math.sin(i) * 25.0 - 4.0)
+    }.toDF("label", "prediction").repartition(4)
+    def evaluator(df: DataFrame) = EvalMetrics(
+      Trainer.evaluator("label", "rmse").evaluate(df),
+      Trainer.evaluator("label", "r2").evaluate(df),
+      Trainer.evaluator("label", "mae").evaluate(df))
+    val (one, three) = (Trainer.evaluate(preds, "label"), evaluator(preds))
+    for ((a, b) <- one.productIterator.zip(three.productIterator)) {
+      val (x, y) = (a.asInstanceOf[Double], b.asInstanceOf[Double])
+      x shouldBe y +- math.abs(y) * 1e-9
+    }
+    // a NaN prediction makes every metric NaN on both paths
+    val nan = preds.union(Seq((1.0, Double.NaN)).toDF("label", "prediction"))
+    Trainer.evaluate(nan, "label").productIterator.toSeq
+      .map(_.asInstanceOf[Double].isNaN) shouldBe Seq(true, true, true)
+    evaluator(nan).productIterator.toSeq
+      .map(_.asInstanceOf[Double].isNaN) shouldBe Seq(true, true, true)
+    // a null prediction fails on both paths
+    val withNull = preds.union(Seq[(Double, Option[Double])]((1.0, None))
+      .toDF("label", "prediction"))
+    intercept[Exception](Trainer.evaluate(withNull, "label"))
+    intercept[Exception](evaluator(withNull))
+  }
+
   test("CV selects the unregularized model on noise-free linear data") {
     val df = Encoding.buildPipeline(Seq(), Seq("size"), "skip")
       .fit(listings).transform(listings)

@@ -192,6 +192,109 @@ class PredictionServerSpec extends SparkSpec {
     }
   }
 
+  /** Served batch CSV → (id → 2-decimal price). */
+  private def batchRows(r: HttpResponse[String]): Map[Long, Double] = {
+    r.statusCode() shouldBe 200
+    val lines = r.body().trim.split("\n")
+    lines.head shouldBe "id_annonce,prediction_price"
+    lines.drop(1).map { l =>
+      val Array(id, p) = l.split(","); id.toLong -> p.toDouble
+    }.toMap
+  }
+
+  private def directRows(rows: Seq[(Long, String, Double)]): Map[Long, Double] =
+    fitted.predictBatch(rows.toDF("id_annonce", "property_type", "size"))
+      .select(col("id_annonce"), col("prediction_price")).collect()
+      .map(row => row.getLong(0) ->
+        math.floor(row.getDouble(1) * 100 + 0.5) / 100).toMap
+
+  test("batch columns are matched by name: reordered upload with extra " +
+      "columns returns predictBatch's rows") {
+    withServer { port =>
+      val csv = "note,size,city,id_annonce,property_type\n" +
+        "a,75.0,Paris,20,maison\nb,100.0,Lyon,21,appartement\n" +
+        "c,130.0,,22,propriété\n"
+      val served = batchRows(post(port, "/predict/batch", csv))
+      val direct = directRows(Seq((20L, "maison", 75.0),
+        (21L, "appartement", 100.0), (22L, "propriété", 130.0)))
+      served.keySet shouldBe direct.keySet
+      for ((id, p) <- direct) served(id) shouldBe p +- 0.011
+    }
+  }
+
+  test("a batch upload that lacks a served column is a 400 naming it") {
+    withServer { port =>
+      val r = post(port, "/predict/batch",
+        "id_annonce,property_type\n1,maison\n")
+      r.statusCode() shouldBe 400
+      r.body() should include("'size'")
+    }
+  }
+
+  test("a batch value that does not parse as its served type is a 400") {
+    withServer { port =>
+      val r = post(port, "/predict/batch",
+        "id_annonce,property_type,size\n1,maison,75.0\n2,maison,big\n")
+      r.statusCode() shouldBe 400
+      r.body() should include("does not parse")
+    }
+  }
+
+  test("two concurrent batch uploads each get exactly their own rows") {
+    withServer { port =>
+      def upload(ids: Range) = client.sendAsync(
+        HttpRequest.newBuilder(
+          URI.create(s"http://localhost:$port/predict/batch"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            "id_annonce,property_type,size\n" + ids.map(i =>
+              s"$i,maison,${30 + i % 100}.0").mkString("\n"))).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val (a, b) = (upload(1000 until 1200), upload(2000 until 2300))
+      batchRows(a.join()).keySet shouldBe (1000L until 1200L).toSet
+      batchRows(b.join()).keySet shouldBe (2000L until 2300L).toSet
+    }
+  }
+
+  test("after the first upload, each batch upload runs exactly one Spark job") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // job starts in listener-bus order; a marker job run on this thread
+    // brackets the server's jobs, so once the closing marker is seen every
+    // job started before it has been counted (the bus is FIFO)
+    val marker = "graft.test.marker"
+    val starts = new ConcurrentLinkedQueue[String]
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val m = Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+        starts.add(m.getOrElse("server"))
+        if (m.contains("close")) closed.countDown()
+      }
+    }
+    def mark(m: String): Unit = {
+      spark.sparkContext.setLocalProperty(marker, m)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+    }
+    val csv = "id_annonce,property_type,size\n" +
+      "10,maison,75.0\n11,appartement,100.0\n12,propriété,130.0\n"
+    withServer { port =>
+      post(port, "/predict/batch", csv).statusCode() shouldBe 200
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        mark("open")
+        (1 to 2).foreach(_ =>
+          post(port, "/predict/batch", csv).statusCode() shouldBe 200)
+        mark("close")
+        closed.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = starts.asScala.toSeq
+    seen.slice(seen.indexOf("open") + 1, seen.indexOf("close"))
+      .count(_ == "server") shouldBe 2
+  }
+
   test("stop() terminates the handler pool's threads") {
     import scala.jdk.CollectionConverters._
     def poolThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala

@@ -157,4 +157,11 @@ class TablesSpec extends SparkSpec {
       mn should be > 1500000000000000000L // ≥ ~2017 in epoch-ns
     }
   }
+
+  test("scratch dirs lie under the working checkout's target/qtmp") {
+    val root = java.nio.file.Paths.get("").toAbsolutePath.resolve("target/qtmp")
+    val dir = java.nio.file.Paths.get(Tables.scratch("/data/sf0.01", "s06"))
+    dir.isAbsolute shouldBe true
+    dir shouldBe root.resolve("sf0.01/s06")
+  }
 }
