@@ -21,10 +21,9 @@ import org.apache.spark.sql.types.StructType
   * the smearing inverse produces finite prices — unlike the reference,
   * whose exp(raw-price prediction) overflowed to inf on every row.
   *
-  * Serving prepares both paths once per served schema: [[prepareSingle]]
-  * compiles a driver-local row evaluator, and [[prepareBatch]] keeps the
-  * analyzed `predictBatch` plan (FE analyzed and model broadcast once) and
-  * rebinds each upload into it, so a typed upload runs as one Spark job.
+  * Serving compiles the pipeline once per served schema with
+  * [[prepareSingle]] into a driver-local row evaluator, which answers both
+  * single rows and batch uploads; [[predictBatch]] is the distributed path.
   */
 class Predictor(
     val preprocess: DataFrame => DataFrame,
@@ -66,16 +65,5 @@ class Predictor(
       new java.util.ArrayList[Row](), schema)
     val out = predictBatch(template).select(col("prediction_price"))
     new PreparedPredictor(out.queryExecution.analyzed, schema, "prediction_price")
-  }
-
-  /** Analyze `predictBatch` once over an empty relation of `schema`
-    * (nullable, as any file read is) and rebind each upload into that
-    * plan. See [[PreparedBatch]].
-    */
-  def prepareBatch(spark: SparkSession, schema: StructType): PreparedBatch = {
-    val template = spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(schema.fields.map(_.copy(nullable = true))))
-    new PreparedBatch(spark, predictBatch(template).queryExecution.analyzed)
   }
 }

@@ -68,8 +68,15 @@ final class PreparedPredictor private[infer] (
     * Returns None if a Filter stage dropped the row (strict-mode null
     * policy / handleInvalid=skip semantics).
     */
-  def predictRow(row: Row): Option[Double] = {
-    var current: InternalRow = toInternal(row)
+  def predictRow(row: Row): Option[Double] = predictInternal(toInternal(row))
+
+  /** [[predictRow]] over a row already in Spark's internal form, with the
+    * prepared schema's columns in its order (e.g. what Spark's CSV parser
+    * yields for that schema), so a caller that parses rows itself skips
+    * the external-row conversion.
+    */
+  def predictInternal(row: InternalRow): Option[Double] = {
+    var current = row
     var i = 0
     while (i < steps.length) {
       steps(i) match {

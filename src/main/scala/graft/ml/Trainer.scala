@@ -22,12 +22,16 @@ final case class EvalMetrics(rmse: Double, r2: Double, mae: Double)
   */
 object Trainer {
 
+  /** Node ids are cached per row, so each level's pass looks a row's node
+    * up instead of walking every tree from its root; the trees are the same.
+    */
   def randomForest(labelCol: String, numTrees: Int = 50, maxDepth: Int = 10,
       minInstancesPerNode: Int = 2, seed: Long = 42L): RandomForestRegressor =
     new RandomForestRegressor()
       .setLabelCol(labelCol).setFeaturesCol("features")
       .setNumTrees(numTrees).setMaxDepth(maxDepth)
       .setMinInstancesPerNode(minInstancesPerNode).setSeed(seed)
+      .setCacheNodeIds(true)
 
   def linear(labelCol: String, regParam: Double = 0.0,
       elasticNetParam: Double = 0.0): LinearRegression =

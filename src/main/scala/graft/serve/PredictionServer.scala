@@ -2,11 +2,17 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
+import java.util.concurrent.Future
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.CsvBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.infer.{PreparedPredictor, Predictor}
 
@@ -20,20 +26,20 @@ import graft.infer.{PreparedPredictor, Predictor}
   *    prediction" form). Served by [[PreparedPredictor]]: zero Spark jobs,
   *    zero planning per request — the compiled Project/Filter chain runs
   *    on the handler thread in microseconds, so a driver-side server
-  *    sustains thousands of req/s while the cluster stays free for batch
-  *    work. A row dropped by the strict null policy returns
-  *    `prediction_price: null, dropped: true` (app.py's failed-transform
-  *    warning path).
+  *    sustains thousands of req/s. A row dropped by the strict null policy
+  *    returns `prediction_price: null, dropped: true` (app.py's
+  *    failed-transform warning path).
   *  - `POST /predict/batch` — a CSV upload (app.py's file_uploader flow,
-  *    same format as X_test.csv). This is a REAL distributed job, ONE per
-  *    upload: the full feature transform → model → smearing inverse plan
-  *    is analyzed once per server ([[graft.infer.PreparedBatch]], model
-  *    broadcast once), each upload is read with the served types (no
-  *    inference pass) and rebound into it, and the result is returned as
-  *    `id_annonce,prediction_price` CSV (app.py:110-112's result frame),
-  *    written by the executors and STREAMED to the response — no
-  *    driver-side collect, so batch size is bounded by cluster capacity,
-  *    not driver heap.
+  *    same format as X_test.csv), answered with `id_annonce,prediction_price`
+  *    CSV (app.py:110-112's result frame). Also answered on the driver, with
+  *    no Spark job: Spark's own CSV parser reads the upload with the served
+  *    types, and compiled chains like the single-row one evaluate it, a
+  *    chunk of rows per chain, over a pool of at most one chain per core of
+  *    the session. The server runs in local mode by design (like the
+  *    reference's Streamlit app), so the driver's cores ARE the cluster: a
+  *    job per upload would add optimizer, scheduling and a round trip
+  *    through part files, and no parallelism the pool lacks.
+  *    [[Predictor.predictBatch]] stays the distributed path (the CLI's).
   *
   * Single-row eval is serialized on a lock: catalyst `Expression.eval`
   * trees may hold per-instance mutable state (codegen-fallback exprs,
@@ -52,6 +58,7 @@ final class PredictionServer(
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
+  private var workers: java.util.concurrent.ExecutorService = _
   private val lock = new Object
 
   def start(): InetSocketAddress = synchronized {
@@ -63,14 +70,17 @@ final class PredictionServer(
     server.createContext("/predict", handler(handleSingle))
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
+    workers = java.util.concurrent.Executors.newFixedThreadPool(chainCap)
     server.start()
     server.getAddress
   }
 
-  /** Stops the listener and the handler pool (its threads are non-daemon). */
+  /** Stops the listener, the handler pool and the batch workers (their
+    * threads are non-daemon). */
   def stop(): Unit = synchronized {
     if (server != null) { server.stop(0); server = null }
     if (pool != null) { pool.shutdown(); pool = null }
+    if (workers != null) { workers.shutdown(); workers = null }
   }
 
   private def handler(f: HttpExchange => (Int, String, String)): HttpHandler =
@@ -88,7 +98,7 @@ final class PredictionServer(
   /** [[handler]] for endpoints that stream their own response body
     * (the batch path): `f` commits headers and writes bytes itself. An
     * exception BEFORE the commit still produces the clean JSON error;
-    * one after it (a failure mid-stream) can only truncate the chunked
+    * one after it (a failure mid-stream) can only truncate the
     * response — the client sees a protocol error instead of a silently
     * short file, which is the correct failure mode for a stream.
     */
@@ -221,92 +231,136 @@ final class PredictionServer(
     }
   }
 
-  /** The batch plan, analyzed once per server on its first upload (not
-    * at construction: ServeMain's start-up stays the single-row path's). */
-  private lazy val batch = predictor.prepareBatch(spark, schema)
+  // nullable, as a value missing from an upload reads as null
+  private val batchSchema = StructType(schema.fields.map(_.copy(nullable = true)))
+  // the answer's id column is the upload's, read as served; a schema
+  // without one refuses every upload (lineParser), not the server
+  private val idPos = batchSchema.fields.indexWhere(_.name.equalsIgnoreCase("id_annonce"))
+  private lazy val answerSchema = StructType(Seq(
+    StructField("id_annonce", batchSchema(idPos).dataType),
+    StructField("prediction_price", StringType)))
 
-  /** Batch predictions WITHOUT a driver-side collect: the 2-column result
-    * is formatted and written BY THE EXECUTORS as a distributed CSV job,
-    * and the handler then streams the part files into a chunked response
-    * — O(io-buffer) driver heap at any batch size. Spark's `format_string`
-    * is Locale.US by construction, so a comma-decimal default locale
-    * (fr_FR) can't corrupt the 2-column CSV.
+  // Batch chains: compiled from `predictor` when an upload finds none idle
+  // (never at construction, so ServeMain's start-up stays the single-row
+  // path's), at most one per core of the session, and reused across
+  // uploads; each runs on one worker thread at a time.
+  private val chainCap = spark.sparkContext.defaultParallelism
+  private val unmade = new java.util.concurrent.Semaphore(chainCap)
+  private val idle = new java.util.concurrent.LinkedBlockingDeque[PreparedPredictor]
+
+  private def borrowChain(): PreparedPredictor = {
+    val chain = idle.pollFirst()
+    if (chain != null) chain
+    else if (unmade.tryAcquire()) {
+      try predictor.prepareSingle(spark, batchSchema)
+      catch { case e: Throwable => unmade.release(); throw e }
+    } else idle.takeFirst()
+  }
+
+  /** Batch predictions on the driver, with no Spark job. The upload is
+    * spooled, its header line names the columns (served ones are read as
+    * their served type, any other as a string), and the rest is cut into
+    * chunks of [[PredictionServer.ChunkRows]] lines. Each chunk is parsed
+    * by Spark's line-mode CSV parser (FAILFAST) and evaluated by one
+    * chain from the pool on a worker thread; at most one chunk per chain
+    * is in flight per upload, and the answers are written in upload order.
+    * Rows the pipeline drops (strict null policy, unseen category) are
+    * left out, as [[Predictor.predictBatch]] leaves them out. Prices are
+    * `%.2f` in Locale.US, so a comma-decimal default locale (fr_FR) can't
+    * corrupt the 2-column CSV.
     *
-    * One Spark job per upload. The upload is read with a schema built
-    * from its own header line — the served type for each schema column,
-    * string for any other — so there is no header or inference pass, and
-    * it is rebound into the prepared plan ([[PreparedBatch]]), so the
-    * feature transform is not analyzed and the model not broadcast again.
-    * The job runs to completion BEFORE the response commits, so a client
-    * error still surfaces as a clean 400: a missing schema column, or
-    * (FAILFAST) a value that does not parse as its served type.
+    * The whole answer is computed and spooled BEFORE the response
+    * commits, so a client error is always a clean 400 with no partial
+    * body: a missing schema column, or a value that does not parse as its
+    * served type, in any chunk. Driver heap is bounded by the chunks in
+    * flight, not by the upload.
     *
-    * FILESYSTEM ASSUMPTION: the executors write their part files to a
-    * driver-local temp dir and the handler thread reads them back — valid
-    * in local mode (this server's deployment shape, like the reference's
-    * Streamlit app) and consistent with the driver-local upload spool, but
-    * a MULTI-NODE deployment must point both spool and output at a shared
-    * scheme-aware location (hdfs:///s3a://, resolved through the Hadoop
-    * FileSystem like graft.util.IndexStore does) or the part files land on
-    * machines the handler can't see.
+    * FILESYSTEM ASSUMPTION: the upload and the answer are spooled to
+    * driver-local temp files that only the handler thread reads — valid
+    * in local mode, this server's deployment shape.
     */
   private def handleBatch(ex: HttpExchange): Unit = {
     require(ex.getRequestMethod == "POST", "POST a CSV body with a header row")
-    // app.py:137-143 — spool the upload to a temp file for spark.read.csv
-    val tmp = java.nio.file.Files.createTempFile("graft-serve-batch", ".csv")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-serve-out")
+    import java.nio.file.Files
+    // app.py:137-143 — spool the upload to a temp file
+    val upload = Files.createTempFile("graft-serve-batch", ".csv")
+    val answer = Files.createTempFile("graft-serve-answer", ".csv")
     try {
-      java.nio.file.Files.copy(ex.getRequestBody, tmp,
+      Files.copy(ex.getRequestBody, upload,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      import org.apache.spark.sql.functions.{col, format_string}
-      try batch(spark.read.schema(uploadSchema(tmp))
-          .option("header", "true").option("mode", "FAILFAST").csv(tmp.toString))
-        .select(col("id_annonce"),
-          format_string("%.2f", col("prediction_price")).as("prediction_price"))
-        .write.mode("overwrite").csv(outDir.toString)
-      catch {
-        // the caller's upload, not a server fault: surface it as a 400
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"batch CSV does not match the model's input schema: ${e.getMessage}")
-        case e: org.apache.spark.SparkException if malformed(e) =>
-          throw new IllegalArgumentException(
-            s"batch CSV has a value that does not parse as its column's type: ${e.getMessage}")
-      }
+      val in = Files.newBufferedReader(upload, UTF_8)
+      val out = Files.newOutputStream(answer)
+      try {
+        val parse = lineParser(in.readLine())
+        out.write("id_annonce,prediction_price\n".getBytes(UTF_8))
+        val inFlight = scala.collection.mutable.Queue.empty[Future[Array[Byte]]]
+        def writeNext(): Unit =
+          try out.write(inFlight.dequeue().get())
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        try {
+          Iterator.continually(in.readLine()).takeWhile(_ != null)
+            .grouped(PredictionServer.ChunkRows).foreach { lines =>
+              if (inFlight.size == chainCap) writeNext()
+              inFlight.enqueue(workers.submit(() => predictChunk(parse, lines)))
+            }
+          while (inFlight.nonEmpty) writeNext()
+        } finally inFlight.foreach(_.cancel(false))
+      } finally { in.close(); out.close() }
       ex.getResponseHeaders.set("Content-Type", "text/csv")
-      ex.sendResponseHeaders(200, 0) // chunked — length unknown unbuffered
-      val os = ex.getResponseBody
-      os.write("id_annonce,prediction_price\n".getBytes(UTF_8))
-      val parts = java.nio.file.Files.list(outDir)
-      try parts.filter(_.getFileName.toString.startsWith("part-"))
-        .sorted().forEachOrdered { p =>
-          java.nio.file.Files.copy(p, os): Unit
-        }
-      finally parts.close()
-      os.flush()
+      ex.sendResponseHeaders(200, Files.size(answer))
+      Files.copy(answer, ex.getResponseBody)
     } finally {
-      java.nio.file.Files.deleteIfExists(tmp)
-      val walk = java.nio.file.Files.walk(outDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEachOrdered(p => java.nio.file.Files.deleteIfExists(p): Unit)
-      finally walk.close()
+      Files.deleteIfExists(upload)
+      Files.deleteIfExists(answer)
     }
   }
 
-  /** The read schema of a spooled upload, in its header's column order:
-    * the served type for a schema column, string for any other.
+  /** The upload's row parser for its header line: the served columns, in
+    * the served order, of Spark's FAILFAST CSV read of a file whose
+    * columns the header names — the served type for each schema column,
+    * string for any other.
     */
-  private def uploadSchema(csv: java.nio.file.Path): StructType = {
-    val reader = java.nio.file.Files.newBufferedReader(csv, UTF_8)
-    val header = try reader.readLine() finally reader.close()
+  private def lineParser(header: String): Iterator[String] => Iterator[InternalRow] = {
     require(header != null && header.nonEmpty, "POST a CSV body with a header row")
-    val served = schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    StructType(new com.univocity.parsers.csv.CsvParser(
+    require(idPos >= 0, "batch CSV does not match the model's input schema: " +
+      "it has no column 'id_annonce'")
+    val names = new com.univocity.parsers.csv.CsvParser(
       new com.univocity.parsers.csv.CsvParserSettings).parseLine(header)
-      .map { n =>
-        val name = Option(n).getOrElse("")
-        StructField(name, served.getOrElse(name.toLowerCase, StringType))
-      })
+      .map(n => Option(n).getOrElse(""))
+    val twice = names.groupBy(_.toLowerCase).collect { case (n, v) if v.length > 1 => n }
+    require(twice.isEmpty, s"batch CSV names a column twice: ${twice.mkString(", ")}")
+    val served = batchSchema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    val data = StructType(names.map(n =>
+      StructField(n, served.getOrElse(n.toLowerCase, StringType))))
+    val required = StructType(batchSchema.fields.map(f =>
+      data.find(_.name.equalsIgnoreCase(f.name)).getOrElse(
+        throw new IllegalArgumentException(s"batch upload has no column '${f.name}'"))))
+    lines => CsvBridge.parse(spark, data, required, Map("mode" -> "FAILFAST"), lines)
+  }
+
+  /** One chunk's answer lines, from one chain of the pool. */
+  private def predictChunk(parse: Iterator[String] => Iterator[InternalRow],
+      lines: Seq[String]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream
+    val csv = CsvBridge.writer(spark, answerSchema,
+      new java.io.OutputStreamWriter(bytes, UTF_8))
+    val chain = borrowChain()
+    try {
+      val row = new GenericInternalRow(2)
+      parse(lines.iterator).foreach { in =>
+        chain.predictInternal(in).foreach { p =>
+          row.update(0, in.get(idPos, answerSchema.head.dataType))
+          row.update(1, UTF8String.fromString(String.format(Locale.US, "%.2f", p)))
+          csv.write(row)
+        }
+      }
+    } catch {
+      case e: org.apache.spark.SparkException if malformed(e) =>
+        throw new IllegalArgumentException(
+          s"batch CSV has a value that does not parse as its column's type: ${e.getMessage}")
+    } finally idle.offerFirst(chain)
+    csv.close()
+    bytes.toByteArray
   }
 
   /** A FAILFAST read that met a value it cannot parse as the column's type. */
@@ -316,6 +370,12 @@ final class PredictionServer(
         Option(t.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
       case _ => false
     }
+}
+
+object PredictionServer {
+  /** Rows per chunk of a batch upload: an upload this size or smaller
+    * runs on one chain; a larger one spreads over the chain pool. */
+  private[serve] val ChunkRows = 4096
 }
 
 /** `runMain graft.serve.ServeMain --model-dir D [--model-type rf|lr|gbt]

@@ -255,7 +255,7 @@ class PredictionServerSpec extends SparkSpec {
     }
   }
 
-  test("after the first upload, each batch upload runs exactly one Spark job") {
+  test("after the first upload, a batch upload runs no Spark job") {
     import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // job starts in listener-bus order; a marker job run on this thread
@@ -292,7 +292,83 @@ class PredictionServerSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val seen = starts.asScala.toSeq
     seen.slice(seen.indexOf("open") + 1, seen.indexOf("close"))
-      .count(_ == "server") shouldBe 2
+      .count(_ == "server") shouldBe 0
+  }
+
+  test("after the first upload, a batch upload makes no model broadcast") {
+    // a forest: spark.ml tree models broadcast themselves on every transform
+    val forest = new Predictor(fitted.preprocess,
+      graft.ml.Trainer.randomForest("log_price", numTrees = 5, maxDepth = 4)
+        .fit(fitted.targetTransformer.transform(fitted.preprocess(listings))),
+      fitted.targetTransformer)
+    val csv = "id_annonce,property_type,size\n10,maison,75.0\n11,appartement,100.0\n"
+    def broadcastsDuring(f: => Unit): Long = {
+      val before = spark.sparkContext.broadcast(0).id
+      f
+      spark.sparkContext.broadcast(0).id - before - 1
+    }
+    val srv = new PredictionServer(spark, forest,
+      forest.prepareSingle(spark, inputSchema), inputSchema)
+    val port = srv.start().getPort
+    try {
+      post(port, "/predict/batch", csv).statusCode() shouldBe 200
+      broadcastsDuring(
+        post(port, "/predict/batch", csv).statusCode() shouldBe 200) shouldBe 0L
+    } finally srv.stop()
+    broadcastsDuring(forest.predictBatch(
+      Seq((10L, "maison", 75.0)).toDF("id_annonce", "property_type", "size"))
+      .collect()) should be > 0L
+  }
+
+  private def uploadCsv(rows: Seq[(Long, String, Double)]): String =
+    rows.map { case (id, t, size) => s"$id,$t,$size" }
+      .mkString("id_annonce,property_type,size\n", "\n", "\n")
+
+  test("a multi-chunk batch upload comes back in upload order and equals " +
+      "predictBatch's lines") {
+    val n = 3 * PredictionServer.ChunkRows + 17
+    val types = Seq("maison", "appartement", "propriété")
+    // ids in a scrambled order, so upload order is not id order
+    val rows = (0 until n).map { i =>
+      ((i.toLong * 7919) % n + 1, types(i % 3), 30.0 + i % 150)
+    }
+    withServer { port =>
+      val r = post(port, "/predict/batch", uploadCsv(rows))
+      r.statusCode() shouldBe 200
+      val lines = r.body().split("\n").toSeq
+      lines.head shouldBe "id_annonce,prediction_price"
+      lines.tail.map(_.takeWhile(_ != ',').toLong) shouldBe rows.map(_._1)
+      val direct = fitted.predictBatch(rows.toDF("id_annonce", "property_type", "size"))
+        .select(format_string("%d,%.2f", col("id_annonce"), col("prediction_price")))
+        .collect().map(_.getString(0)).toSet
+      lines.tail.toSet shouldBe direct
+    }
+  }
+
+  test("a value that does not parse in the last chunk is a 400 with no " +
+      "partial answer") {
+    val n = 2 * PredictionServer.ChunkRows + 10
+    val csv = uploadCsv((1 to n).map(i => (i.toLong, "maison", 75.0))) +
+      s"${n + 1},maison,big\n"
+    withServer { port =>
+      val r = post(port, "/predict/batch", csv)
+      r.statusCode() shouldBe 400
+      r.body() should include("does not parse")
+      r.body() should not include "prediction_price"
+    }
+  }
+
+  test("batch rows the pipeline drops (an unseen category) are left out, " +
+      "as predictBatch leaves them out") {
+    val rows = Seq((30L, "maison", 75.0), (31L, "château", 90.0),
+      (32L, "appartement", 100.0))
+    withServer { port =>
+      val served = batchRows(post(port, "/predict/batch", uploadCsv(rows)))
+      val direct = directRows(rows)
+      direct.keySet shouldBe Set(30L, 32L)
+      served.keySet shouldBe direct.keySet
+      for ((id, p) <- direct) served(id) shouldBe p +- 0.011
+    }
   }
 
   test("stop() terminates the handler pool's threads") {
