@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * whose exp(raw-price prediction) overflowed to inf on every row.
   *
   * Serving compiles the pipeline once per served schema with
-  * [[prepareSingle]] into a driver-local row evaluator, which answers both
-  * single rows and batch uploads; [[predictBatch]] is the distributed path.
+  * [[prepareSingle]] into a driver-local row evaluator; its forks answer
+  * both single rows and batch uploads, one thread each. [[predictBatch]]
+  * is the distributed path.
   */
 class Predictor(
     val preprocess: DataFrame => DataFrame,
@@ -57,13 +58,15 @@ class Predictor(
   }
 
   /** Compile the full fitted pipeline (feature transform → model → smearing
-    * inverse) into a driver-local row evaluator — one-time Catalyst
-    * analysis, zero per-call planning/jobs. See [[PreparedPredictor]].
+    * inverse) into a driver-local row evaluator — one Catalyst analysis
+    * (and one model broadcast) per call, zero per-row planning or jobs.
+    * More chains of the same pipeline come from [[PreparedPredictor.fork]],
+    * not from another call. See [[PreparedPredictor]].
     */
   def prepareSingle(spark: SparkSession, schema: StructType): PreparedPredictor = {
     val template = spark.createDataFrame(
       new java.util.ArrayList[Row](), schema)
     val out = predictBatch(template).select(col("prediction_price"))
-    new PreparedPredictor(out.queryExecution.analyzed, schema, "prediction_price")
+    new PreparedPredictor(out.queryExecution.analyzed, schema)
   }
 }

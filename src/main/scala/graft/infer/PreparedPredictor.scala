@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, Ge
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.types.StructType
 
-/** Driver-local single-row serving path.
+/** Driver-local row evaluator: the served pipeline compiled into a chain.
   *
   * The naive [[Predictor.predictSingle]] rebuilds a DataFrame and runs the
   * FULL Catalyst analyze→optimize→schedule cycle per request — tens of
@@ -20,12 +20,23 @@ import org.apache.spark.sql.types.StructType
   * `Expression.eval` over an InternalRow — no job, no planning, no Spark
   * action.
   *
+  * One chain must not run on two threads at once: catalyst expressions may
+  * hold per-instance state (`ScalaUDF` converters, `Nondeterministic`
+  * nodes). Another thread takes a [[fork]].
+  *
   * Anything outside that shape (a join, an aggregate — i.e. a transform
   * that genuinely needs the cluster) fails at PREPARE time with a clear
   * message; batch inference remains [[Predictor.predictBatch]].
   */
-final class PreparedPredictor private[infer] (
-    plan: LogicalPlan, schema: StructType, resultCol: String) {
+final class PreparedPredictor private (
+    plan: LogicalPlan, val schema: StructType, encoder: ExpressionEncoder[Row]) {
+
+  private[infer] def this(plan: LogicalPlan, schema: StructType) =
+    this(plan, schema, ExpressionEncoder(RowEncoder.encoderFor(schema)))
+
+  /** Another chain over the same analyzed plan, bound again with fresh
+    * copies of its stateful expressions: no analysis, no broadcast. */
+  def fork(): PreparedPredictor = new PreparedPredictor(plan, schema, encoder)
 
   private sealed trait Step
   private final case class ProjectStep(exprs: Array[Expression]) extends Step
@@ -33,36 +44,30 @@ final class PreparedPredictor private[infer] (
 
   // bottom-up evaluation order; prepare-time failure on unsupported shapes
   private val steps: Array[Step] = {
+    def bind(e: Expression, child: LogicalPlan): Expression = {
+      val bound = BindReferences.bindReference(e, child.output)
+        .freshCopyIfContainsStatefulExpression()
+      bound.foreach { case nd: Nondeterministic => nd.initialize(0); case _ => () }
+      bound
+    }
     def compile(p: LogicalPlan): List[Step] = p match {
       case _: LocalRelation => Nil
       case SubqueryAlias(_, child) => compile(child)
       case Project(exprs, child) =>
-        val bound = exprs.map(e =>
-          BindReferences.bindReference[Expression](e, child.output)).toArray
-        compile(child) :+ ProjectStep(bound)
+        compile(child) :+ ProjectStep(exprs.map(bind(_, child)).toArray)
       case Filter(cond, child) =>
-        val bound = BindReferences.bindReference(cond, child.output)
-        compile(child) :+ FilterStep(bound)
+        compile(child) :+ FilterStep(bind(cond, child))
       case other => throw new IllegalArgumentException(
         s"prepared single-row serving supports Project/Filter chains over a " +
           s"local relation; found ${other.nodeName} — use predictBatch")
     }
-    val s = compile(plan).toArray
-    s.foreach {
-      case ProjectStep(exprs) => exprs.foreach(_.foreach {
-        case nd: Nondeterministic => nd.initialize(0)
-        case _ => ()
-      })
-      case FilterStep(cond) => cond.foreach {
-        case nd: Nondeterministic => nd.initialize(0)
-        case _ => ()
-      }
-    }
-    s
+    compile(plan).toArray
   }
 
-  private val toInternal =
-    ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+  private[infer] def expressions: Seq[Expression] =
+    steps.toSeq.flatMap { case ProjectStep(es) => es.toSeq; case FilterStep(c) => Seq(c) }
+
+  private val toInternal = encoder.createSerializer()
 
   /** Single row in → prediction out, entirely on the calling thread.
     * Returns None if a Filter stage dropped the row (strict-mode null

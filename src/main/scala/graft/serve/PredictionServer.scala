@@ -21,56 +21,61 @@ import graft.infer.{PreparedPredictor, Predictor}
   * re-expressed as a JSON/CSV API on the JDK's built-in HttpServer (no
   * framework dependency; Jackson ships with Spark).
   *
-  * Two prediction modes, mirroring the reference exactly:
+  * Both of the reference's prediction modes run on the driver through
+  * the compiled pipeline `prepared` ([[Predictor.prepareSingle]]): no
+  * Spark job and no planning per request.
   *  - `POST /predict` — one property as a flat JSON object (the "single
-  *    prediction" form). Served by [[PreparedPredictor]]: zero Spark jobs,
-  *    zero planning per request — the compiled Project/Filter chain runs
-  *    on the handler thread in microseconds, so a driver-side server
-  *    sustains thousands of req/s. A row dropped by the strict null policy
-  *    returns `prediction_price: null, dropped: true` (app.py's
-  *    failed-transform warning path).
+  *    prediction" form). A row dropped by the strict null policy returns
+  *    `prediction_price: null, dropped: true` (app.py's failed-transform
+  *    warning path).
   *  - `POST /predict/batch` — a CSV upload (app.py's file_uploader flow,
   *    same format as X_test.csv), answered with `id_annonce,prediction_price`
-  *    CSV (app.py:110-112's result frame). Also answered on the driver, with
-  *    no Spark job: Spark's own CSV parser reads the upload with the served
-  *    types, and compiled chains like the single-row one evaluate it, a
-  *    chunk of rows per chain, over a pool of at most one chain per core of
-  *    the session. The server runs in local mode by design (like the
+  *    CSV (app.py:110-112's result frame), read by Spark's own CSV parser
+  *    with the served types and evaluated a chunk of rows per worker
+  *    thread. The server runs in local mode by design (like the
   *    reference's Streamlit app), so the driver's cores ARE the cluster: a
   *    job per upload would add optimizer, scheduling and a round trip
   *    through part files, and no parallelism the pool lacks.
   *    [[Predictor.predictBatch]] stays the distributed path (the CLI's).
   *
-  * Single-row eval is serialized on a lock: catalyst `Expression.eval`
-  * trees may hold per-instance mutable state (codegen-fallback exprs,
-  * initialized Nondeterministic nodes), so one compiled chain must not
-  * run on two threads at once. The critical section is microseconds; for
-  * multi-core serving run one server per executor-sized pool instead of
-  * removing the lock.
+  * One pool of chains serves both: a request or a batch chunk borrows a
+  * chain, which no other thread uses meanwhile, and returns it. Every
+  * chain is a [[PreparedPredictor.fork]] of `prepared`, which the server
+  * never evaluates itself. The served schema is `prepared.schema`; its
+  * fields must be nullable, as a value missing from a request or an
+  * upload reads as null.
   */
 final class PredictionServer(
     spark: SparkSession,
-    predictor: Predictor,
     prepared: PreparedPredictor,
-    schema: StructType,
     port: Int = 0) {
+
+  /** `predictor` is unused and `schema` must be `prepared.schema`: kept only
+    * for the benchmark's pipeline workload; the next benchmark change drops it. */
+  def this(spark: SparkSession, predictor: Predictor, prepared: PreparedPredictor,
+      schema: StructType) = {
+    this(spark, prepared)
+    require(schema == prepared.schema, "schema must be the prepared chain's schema")
+  }
+
+  private val schema = prepared.schema
+  for (f <- schema.fields) require(f.nullable, s"served field '${f.name}' must be nullable")
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
   private var workers: java.util.concurrent.ExecutorService = _
-  private val lock = new Object
 
   def start(): InetSocketAddress = synchronized {
     require(server == null, "already started")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", handler(handleForm))
     server.createContext("/health", handler(handleHealth))
-    server.createContext("/predict/batch", streamingHandler(handleBatch))
+    server.createContext("/predict/batch", handler(handleBatch))
     server.createContext("/predict", handler(handleSingle))
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
-    workers = java.util.concurrent.Executors.newFixedThreadPool(chainCap)
+    workers = java.util.concurrent.Executors.newFixedThreadPool(workerCount)
     server.start()
     server.getAddress
   }
@@ -83,34 +88,18 @@ final class PredictionServer(
     if (workers != null) { workers.shutdown(); workers = null }
   }
 
-  private def handler(f: HttpExchange => (Int, String, String)): HttpHandler =
-    (ex: HttpExchange) =>
-      try {
-        val (code, contentType, body) = f(ex)
-        respond(ex, code, contentType, body)
-      } catch {
-        case e: Exception =>
-          respond(ex, errorCode(e), "application/json",
-            mapper.createObjectNode()
-              .put("error", String.valueOf(e.getMessage)).toString)
-      } finally ex.close()
-
-  /** [[handler]] for endpoints that stream their own response body
-    * (the batch path): `f` commits headers and writes bytes itself. An
-    * exception BEFORE the commit still produces the clean JSON error;
-    * one after it (a failure mid-stream) can only truncate the
-    * response — the client sees a protocol error instead of a silently
-    * short file, which is the correct failure mode for a stream.
+  /** Runs an endpoint, which sends its own response. An exception before
+    * the response is sent becomes the JSON error; one after it (the
+    * client went away mid-body) can only cut the response short.
     */
-  private def streamingHandler(f: HttpExchange => Unit): HttpHandler =
+  private def handler(f: HttpExchange => Unit): HttpHandler =
     (ex: HttpExchange) =>
       try f(ex)
       catch {
-        case e: Exception =>
-          try respond(ex, errorCode(e), "application/json",
+        case e: Exception if ex.getResponseCode == -1 =>
+          respond(ex, errorCode(e), "application/json",
             mapper.createObjectNode()
               .put("error", String.valueOf(e.getMessage)).toString)
-          catch { case _: java.io.IOException => () }
       } finally ex.close()
 
   /** Client errors (schema violations via require/coerce, malformed
@@ -138,9 +127,9 @@ final class PredictionServer(
     * no assets, no framework — the API stays the real surface; this is the
     * widget on top.
     */
-  private def handleForm(ex: HttpExchange): (Int, String, String) = {
+  private def handleForm(ex: HttpExchange): Unit = {
     if (ex.getRequestURI.getPath != "/")
-      return (404, "application/json", """{"error":"not found"}""")
+      return respond(ex, 404, "application/json", """{"error":"not found"}""")
     def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
       .replace(">", "&gt;").replace("\"", "&quot;")
     val fields = schema.fields.map { f =>
@@ -184,36 +173,38 @@ final class PredictionServer(
          |  document.getElementById('bout').textContent = await r.text();
          |});
          |</script></body></html>""".stripMargin
-    (200, "text/html", html)
+    respond(ex, 200, "text/html", html)
   }
 
-  private def handleHealth(ex: HttpExchange): (Int, String, String) = {
+  private def handleHealth(ex: HttpExchange): Unit = {
     val node = mapper.createObjectNode().put("status", "ok")
     val fields = node.putArray("schema")
     schema.fields.foreach(f =>
       fields.addObject().put("name", f.name)
         .put("type", f.dataType.simpleString))
-    (200, "application/json", node.toString)
+    respond(ex, 200, "application/json", node.toString)
   }
 
-  private def handleSingle(ex: HttpExchange): (Int, String, String) = {
+  private def handleSingle(ex: HttpExchange): Unit = {
     require(ex.getRequestMethod == "POST", "POST a JSON object")
     val json = mapper.readTree(ex.getRequestBody)
     require(json != null && json.isObject, "body must be a JSON object")
     val values: Map[String, Any] = schema.fields.flatMap { f =>
       coerce(json.get(f.name), f.dataType, f.name).map(f.name -> _)
     }.toMap
-    val pred = lock.synchronized { prepared.predict(values) }
+    val pred = withChain(_.predict(values))
     val node = mapper.createObjectNode()
     pred match {
       case Some(p) => node.put("prediction_price", p)
       case None => node.putNull("prediction_price"); node.put("dropped", true)
     }
-    (200, "application/json", node.toString)
+    respond(ex, 200, "application/json", node.toString)
   }
 
   /** JSON → the schema's JVM type; wrong-typed values fail the request
-    * rather than silently predicting on a null.
+    * rather than silently predicting on a null. An integer field takes only
+    * a JSON integer in its range, as the batch CSV parser takes only an
+    * integer literal: `2.7` is refused, not truncated to 2.
     */
   private def coerce(n: JsonNode, dt: DataType, name: String): Option[Any] = {
     if (n == null || n.isNull) return None
@@ -222,8 +213,8 @@ final class PredictionServer(
       // RowEncoder's serializer validates external types strictly: a
       // FloatType field must receive a java.lang.Float, not a Double.
       case FloatType if n.isNumber => Some(n.asDouble().toFloat)
-      case LongType if n.canConvertToLong => Some(n.asLong())
-      case IntegerType if n.canConvertToInt => Some(n.asInt())
+      case LongType if n.isIntegralNumber && n.canConvertToLong => Some(n.asLong())
+      case IntegerType if n.isIntegralNumber && n.canConvertToInt => Some(n.asInt())
       case StringType if n.isTextual => Some(n.asText())
       case BooleanType if n.isBoolean => Some(n.asBoolean())
       case _ => throw new IllegalArgumentException(
@@ -231,30 +222,25 @@ final class PredictionServer(
     }
   }
 
-  // nullable, as a value missing from an upload reads as null
-  private val batchSchema = StructType(schema.fields.map(_.copy(nullable = true)))
   // the answer's id column is the upload's, read as served; a schema
   // without one refuses every upload (lineParser), not the server
-  private val idPos = batchSchema.fields.indexWhere(_.name.equalsIgnoreCase("id_annonce"))
+  private val idPos = schema.fields.indexWhere(_.name.equalsIgnoreCase("id_annonce"))
   private lazy val answerSchema = StructType(Seq(
-    StructField("id_annonce", batchSchema(idPos).dataType),
+    StructField("id_annonce", schema(idPos).dataType),
     StructField("prediction_price", StringType)))
 
-  // Batch chains: compiled from `predictor` when an upload finds none idle
-  // (never at construction, so ServeMain's start-up stays the single-row
-  // path's), at most one per core of the session, and reused across
-  // uploads; each runs on one worker thread at a time.
-  private val chainCap = spark.sparkContext.defaultParallelism
-  private val unmade = new java.util.concurrent.Semaphore(chainCap)
-  private val idle = new java.util.concurrent.LinkedBlockingDeque[PreparedPredictor]
+  // batch worker threads, one per core of the session
+  private val workerCount = spark.sparkContext.defaultParallelism
+  // The chain pool: forks made when a request finds none idle (never at
+  // construction, so ServeMain's start-up is one prepareSingle), reused
+  // last in first out. A request never waits for a chain, and the pool
+  // holds at most one per thread that borrows: handler threads and workers.
+  private val idle = new java.util.concurrent.ConcurrentLinkedDeque[PreparedPredictor]
 
-  private def borrowChain(): PreparedPredictor = {
-    val chain = idle.pollFirst()
-    if (chain != null) chain
-    else if (unmade.tryAcquire()) {
-      try predictor.prepareSingle(spark, batchSchema)
-      catch { case e: Throwable => unmade.release(); throw e }
-    } else idle.takeFirst()
+  /** `f` over a chain of the pool, which no other thread uses meanwhile. */
+  private def withChain[T](f: PreparedPredictor => T): T = {
+    val chain = Option(idle.pollFirst()).getOrElse(prepared.fork())
+    try f(chain) finally idle.offerFirst(chain)
   }
 
   /** Batch predictions on the driver, with no Spark job. The upload is
@@ -262,7 +248,7 @@ final class PredictionServer(
     * their served type, any other as a string), and the rest is cut into
     * chunks of [[PredictionServer.ChunkRows]] lines. Each chunk is parsed
     * by Spark's line-mode CSV parser (FAILFAST) and evaluated by one
-    * chain from the pool on a worker thread; at most one chunk per chain
+    * chain from the pool on a worker thread; at most one chunk per worker
     * is in flight per upload, and the answers are written in upload order.
     * Rows the pipeline drops (strict null policy, unseen category) are
     * left out, as [[Predictor.predictBatch]] leaves them out. Prices are
@@ -300,7 +286,7 @@ final class PredictionServer(
         try {
           Iterator.continually(in.readLine()).takeWhile(_ != null)
             .grouped(PredictionServer.ChunkRows).foreach { lines =>
-              if (inFlight.size == chainCap) writeNext()
+              if (inFlight.size == workerCount) writeNext()
               inFlight.enqueue(workers.submit(() => predictChunk(parse, lines)))
             }
           while (inFlight.nonEmpty) writeNext()
@@ -329,10 +315,10 @@ final class PredictionServer(
       .map(n => Option(n).getOrElse(""))
     val twice = names.groupBy(_.toLowerCase).collect { case (n, v) if v.length > 1 => n }
     require(twice.isEmpty, s"batch CSV names a column twice: ${twice.mkString(", ")}")
-    val served = batchSchema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    val served = schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
     val data = StructType(names.map(n =>
       StructField(n, served.getOrElse(n.toLowerCase, StringType))))
-    val required = StructType(batchSchema.fields.map(f =>
+    val required = StructType(schema.fields.map(f =>
       data.find(_.name.equalsIgnoreCase(f.name)).getOrElse(
         throw new IllegalArgumentException(s"batch upload has no column '${f.name}'"))))
     lines => CsvBridge.parse(spark, data, required, Map("mode" -> "FAILFAST"), lines)
@@ -344,8 +330,7 @@ final class PredictionServer(
     val bytes = new java.io.ByteArrayOutputStream
     val csv = CsvBridge.writer(spark, answerSchema,
       new java.io.OutputStreamWriter(bytes, UTF_8))
-    val chain = borrowChain()
-    try {
+    try withChain { chain =>
       val row = new GenericInternalRow(2)
       parse(lines.iterator).foreach { in =>
         chain.predictInternal(in).foreach { p =>
@@ -358,7 +343,7 @@ final class PredictionServer(
       case e: org.apache.spark.SparkException if malformed(e) =>
         throw new IllegalArgumentException(
           s"batch CSV has a value that does not parse as its column's type: ${e.getMessage}")
-    } finally idle.offerFirst(chain)
+    }
     csv.close()
     bytes.toByteArray
   }
@@ -420,8 +405,7 @@ object ServeMain {
         s"--schema-from <sample.parquet> is required ($modelDir has no " +
           "recorded input_schema.json — retrain with the current CLI or " +
           "pass the flag)"))
-    val prepared = predictor.prepareSingle(spark, schema)
-    val srv = new PredictionServer(spark, predictor, prepared, schema, port)
+    val srv = new PredictionServer(spark, predictor.prepareSingle(spark, schema), port)
     val addr = srv.start()
     println(s"""{"status":"serving","port":${addr.getPort}}""")
     Thread.currentThread().join() // serve until killed

@@ -46,8 +46,7 @@ class PredictionServerSpec extends SparkSpec {
   private val client = HttpClient.newHttpClient()
 
   private def withServer(f: Int => Unit): Unit = {
-    val srv = new PredictionServer(spark, fitted,
-      fitted.prepareSingle(spark, inputSchema), inputSchema)
+    val srv = new PredictionServer(spark, fitted.prepareSingle(spark, inputSchema))
     val addr = srv.start()
     try f(addr.getPort) finally srv.stop()
   }
@@ -131,8 +130,7 @@ class PredictionServerSpec extends SparkSpec {
       StructField("id_annonce", LongType),
       StructField("property_type", StringType),
       StructField("size", FloatType)))
-    val srv = new PredictionServer(spark, fitted,
-      fitted.prepareSingle(spark, floatSchema), floatSchema)
+    val srv = new PredictionServer(spark, fitted.prepareSingle(spark, floatSchema))
     val addr = srv.start()
     try {
       val r = post(addr.getPort, "/predict",
@@ -155,17 +153,50 @@ class PredictionServerSpec extends SparkSpec {
   }
 
   test("a server-side failure surfaces as 500, not 400") {
-    val failing = new graft.infer.Predictor(
-      (_: DataFrame) => throw new RuntimeException("executor lost"),
+    // a chain whose evaluation throws: a preprocess UDF that fails on every row
+    val boom = udf((size: Double) =>
+      if (size.isNaN) size else throw new RuntimeException("executor lost"))
+    val failing = new Predictor(
+      (df: DataFrame) => fitted.preprocess(df.withColumn("size", boom(col("size")))),
       fitted.model, fitted.targetTransformer)
-    val srv = new PredictionServer(spark, failing,
-      fitted.prepareSingle(spark, inputSchema), inputSchema)
-    val addr = srv.start()
+    val srv = new PredictionServer(spark, failing.prepareSingle(spark, inputSchema))
+    val port = srv.start().getPort
     try {
-      val r = post(addr.getPort, "/predict/batch",
-        "id_annonce,property_type,size\n1,maison,75.0\n")
-      r.statusCode() shouldBe 500
-      r.body() should include("executor lost")
+      for (r <- Seq(
+          post(port, "/predict", """{"id_annonce": 1, "property_type": "maison", "size": 75.0}"""),
+          post(port, "/predict/batch", "id_annonce,property_type,size\n1,maison,75.0\n"))) {
+        r.statusCode() shouldBe 500
+        r.body() should include("executor lost")
+      }
+    } finally srv.stop()
+  }
+
+  test("a served schema with a non-nullable field is refused, naming the field") {
+    val strict = StructType(inputSchema.fields.map(f =>
+      if (f.name == "size") f.copy(nullable = false) else f))
+    val e = intercept[IllegalArgumentException](
+      new PredictionServer(spark, fitted.prepareSingle(spark, strict)))
+    e.getMessage should include("'size'")
+  }
+
+  test("a fractional value for an integer field is a 400 on both endpoints") {
+    // `floor` is served but unused by the model, as extra raw columns are
+    val withFloor = inputSchema.add(StructField("floor", IntegerType))
+    val srv = new PredictionServer(spark, fitted.prepareSingle(spark, withFloor))
+    val port = srv.start().getPort
+    try {
+      post(port, "/predict", """{"id_annonce": 1, "property_type": "maison", """ +
+        """"size": 75.0, "floor": 2}""").statusCode() shouldBe 200
+      val single = post(port, "/predict", """{"id_annonce": 1, """ +
+        """"property_type": "maison", "size": 75.0, "floor": 2.7}""")
+      single.statusCode() shouldBe 400
+      single.body() should include("'floor'")
+      val long = post(port, "/predict",
+        """{"id_annonce": 1.5, "property_type": "maison", "size": 75.0}""")
+      long.statusCode() shouldBe 400
+      long.body() should include("'id_annonce'")
+      post(port, "/predict/batch", "id_annonce,property_type,size,floor\n" +
+        "1,maison,75.0,2.7\n").statusCode() shouldBe 400
     } finally srv.stop()
   }
 
@@ -295,7 +326,7 @@ class PredictionServerSpec extends SparkSpec {
       .count(_ == "server") shouldBe 0
   }
 
-  test("after the first upload, a batch upload makes no model broadcast") {
+  test("no batch upload, the first included, makes a model broadcast") {
     // a forest: spark.ml tree models broadcast themselves on every transform
     val forest = new Predictor(fitted.preprocess,
       graft.ml.Trainer.randomForest("log_price", numTrees = 5, maxDepth = 4)
@@ -307,14 +338,18 @@ class PredictionServerSpec extends SparkSpec {
       f
       spark.sparkContext.broadcast(0).id - before - 1
     }
-    val srv = new PredictionServer(spark, forest,
-      forest.prepareSingle(spark, inputSchema), inputSchema)
+    val srv = new PredictionServer(spark, forest.prepareSingle(spark, inputSchema))
     val port = srv.start().getPort
-    try {
+    // the first upload spreads over several chains, made as it needs them
+    val large = uploadCsv((1 to 3 * PredictionServer.ChunkRows).map(i =>
+      (i.toLong, "maison", 30.0 + i % 150)))
+    try broadcastsDuring {
+      post(port, "/predict/batch", large).statusCode() shouldBe 200
       post(port, "/predict/batch", csv).statusCode() shouldBe 200
-      broadcastsDuring(
-        post(port, "/predict/batch", csv).statusCode() shouldBe 200) shouldBe 0L
-    } finally srv.stop()
+      post(port, "/predict", """{"id_annonce": 1, "property_type": "maison", "size": 75.0}""")
+        .statusCode() shouldBe 200
+    } shouldBe 0L
+    finally srv.stop()
     broadcastsDuring(forest.predictBatch(
       Seq((10L, "maison", 75.0)).toDF("id_annonce", "property_type", "size"))
       .collect()) should be > 0L
@@ -355,6 +390,50 @@ class PredictionServerSpec extends SparkSpec {
       r.statusCode() shouldBe 400
       r.body() should include("does not parse")
       r.body() should not include "prediction_price"
+    }
+  }
+
+  test("/predict answers equal the direct chain while a multi-chunk upload " +
+      "is in flight") {
+    val direct = fitted.prepareSingle(spark, inputSchema)
+    val types = Seq("maison", "appartement", "propriété")
+    val singles = (0 until 150).map(i => (i.toLong, types(i % 3), 30.0 + i))
+    val expected = singles.map { case (id, t, size) =>
+      direct.predict(Map("id_annonce" -> id, "property_type" -> t, "size" -> size))
+    }
+    val n = 8 * PredictionServer.ChunkRows
+    val upload = uploadCsv((1 to n).map(i => (i.toLong, types(i % 3), 30.0 + i % 150)))
+    withServer { port =>
+      val uploaded = client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/predict/batch"))
+          .POST(HttpRequest.BodyPublishers.ofString(upload)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val during = new java.util.concurrent.atomic.AtomicInteger
+      val threads = java.util.concurrent.Executors.newFixedThreadPool(3)
+      try {
+        val answers = (0 until 3).map { c =>
+          threads.submit(() => {
+            var got = Vector.empty[(Int, Option[Double])]
+            var i = c
+            while (i < singles.size || (!uploaded.isDone && i < 50 * singles.size)) {
+              val (id, t, size) = singles(i % singles.size)
+              val r = post(port, "/predict",
+                s"""{"id_annonce": $id, "property_type": "$t", "size": $size}""")
+              if (!uploaded.isDone) during.incrementAndGet()
+              r.statusCode() shouldBe 200
+              got :+= (i % singles.size) -> """"prediction_price":([-0-9.E]+)""".r
+                .findFirstMatchIn(r.body()).map(_.group(1).toDouble)
+              i += 3
+            }
+            got
+          })
+        }.flatMap(_.get())
+        answers.size should be >= singles.size
+        for ((k, served) <- answers) served shouldBe expected(k)
+      } finally threads.shutdown()
+      val lines = uploaded.join().body().split("\n")
+      lines.length shouldBe n + 1
+      during.get should be > 0
     }
   }
 
